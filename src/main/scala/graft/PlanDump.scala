@@ -89,7 +89,7 @@ object PlanDump {
     "q151_shard_write",     // span assembly: rows ≈ docs+straddlers, no tokens
     "q156_image_neardup_wide", // 16-key banded join + zip_with 256-bit verify
     "q159_video_neardup",   // (frame, block) keys + aligned-frame verify agg
-    "q160_image_dedup_retention", // GraphX CC + WindowGroupLimit keep-best
+    "q160_image_dedup_retention", // HashMin CC + WindowGroupLimit keep-best
     "q165_curated_shards")  // keep-verdict semi-join + q151's span sink
   /** Every NON-audited query with its one-line plan-shape
     * classification — a shape-duplicate of an audited section, a
@@ -135,7 +135,7 @@ object PlanDump {
     "q53_eval_frozen" -> "row-local frozen-head scoring + one confusion agg",
     "q54_ann_recall_kmeans" -> "q45's serving tail + q101's recall join",
     "q57_quality_filter" -> "percentile band: one window pass over row-local scores",
-    "q58_dedup_groups" -> "GraphX HashMin CC — q86's bounded-round shape on RDDs",
+    "q58_dedup_groups" -> "HashMin CC to convergence — q86's Δ-round shape",
     "q59_sketch_profile" -> "constant-memory sketch aggs, one exchange",
     "q60_quantiles_select" -> "q50's shape over selected keys",
     "q90_fuzzy_groups" -> "q89's deletion-variant join + q86-class CC grouping",
@@ -550,7 +550,7 @@ object PlanDump {
       |- **q125 (containment)**: candidates come from the RARE-shingle
       |  prefix (AllPairs df order) equi-joined against the full posting
       |  list — per-key fan-out tracks rare-key document frequency, not
-      |  corpus² (R12ScaleProbe measured candidate volume exactly
+      |  corpus² (SCALE_r12.md measured candidate volume exactly
       |  corpus-LINEAR at K = 1/2/4) — and the exact verify is a
       |  packed-string merge walk against two per-doc sides whose
       |  broadcast is GATED on the measured doc count (above the gate the

@@ -893,14 +893,12 @@ r2o AS (
       t(s, dir, "documents").select(col("doc_id"),
         graft.ext.Dedup.rollingFingerprint(col("text")).as("fp"))),
     // entity-resolution tier of the dedup family: collapse near-dup PAIRS
-    // (q44's provably-complete prefix-filter join) into GROUPS via GraphX
-    // connectedComponents — Pregel min-label propagation, the scalable CC
-    // (O(diameter) rounds over a partitioned edge RDD; a DataFrame
-    // min-propagation loop would re-plan per round). Emits every doc's
-    // canonical id (min doc_id of its component; singletons stay their
-    // own canon) — filtering `doc_id = canon_id` IS the dedup. Oracle:
-    // the same pairs + a recursive-CTE transitive closure (tractable at
-    // oracle scale; the GraphX side is the 100 TB path).
+    // (q44's provably-complete prefix-filter join) into GROUPS via the
+    // HashMin kernel run to convergence (q86's Δ rounds, stopping on the
+    // first round that changes no label). Emits every doc's canonical id
+    // (min doc_id of its component; singletons stay their own canon) —
+    // filtering `doc_id = canon_id` IS the dedup. Oracle: the same pairs
+    // + 16 unrolled HashMin rounds.
     "q58_dedup_groups" -> ((s, dir) =>
       graft.ext.Dedup.dedupGroups(
         t(s, dir, "documents").select(col("doc_id")),
@@ -1152,8 +1150,8 @@ r2o AS (
       graft.ext.Ranking.bm25TopTerms(
         t(s, dir, "documents"), "doc_id", "text", k = 3)),
     // bounded HashMin connected components (5 min-label rounds) over
-    // the co-purchase graph — the DataFrame-native recurrence twin of
-    // q58's converged GraphX components, exact for components of
+    // the co-purchase graph — the bounded form of the kernel behind
+    // q58's converged components, exact for components of
     // diameter ≤ 5, oracle-unrolled like the q76/q77 family
     "q86_cc_bounded" -> ((s, dir) =>
       graft.graph.Analytics.connectedComponentsBounded(
@@ -2760,10 +2758,10 @@ r2o AS (
     }),
     // IMAGE dedup RETENTION (cross-family composition: the multimodal
     // pair generator feeding the text path's entity-resolution +
-    // retention machinery): q154's dHash pairs → GraphX
-    // connectedComponents (Dedup.dedupGroups — Pregel min-label, the
-    // scalable CC) → Dedup.canonicalDocs keeps the highest-n_chars doc
-    // per duplicate group (ties to the smallest id), with the group's
+    // retention machinery): q154's dHash pairs → converged HashMin
+    // components (Dedup.dedupGroups) → Dedup.canonicalDocs keeps the
+    // highest-n_chars doc per duplicate group (ties to the smallest id),
+    // with the group's
     // n_docs/sum_quality audit columns — what a multimodal curation run
     // actually ships: one surviving image per near-dup cluster plus the
     // mass it absorbed. Rides the memoised q154 decode+hash pass; the
@@ -3712,7 +3710,8 @@ r2o AS (
     *
     * The closure is [[dedupGroupsOracleRounds]] UNROLLED rounds of
     * `lbl ← min(lbl, min over in-neighbors' lbl)` — the exact recurrence
-    * the engine's GraphX `connectedComponents` iterates — instead of the
+    * the engine's [[graft.graph.Analytics.connectedComponentsBounded]]
+    * iterates to convergence behind `dedupGroups` — instead of the
     * r7 recursive CTE, whose all-pairs `reach` set is quadratic in
     * component size (DuckDB ground >35 min at sf0.1; SCALE_r7.md). Each
     * round costs one |E| join + a group-min, so the oracle now tracks
@@ -4693,9 +4692,9 @@ r2o AS (
     "q144_stream_dedup_evict" -> (jaccardPairsSql + """
       |  AND NOT ((a.doc_id % 3 = 0 AND b.doc_id % 3 = 2)
       |        OR (a.doc_id % 3 = 2 AND b.doc_id % 3 = 0))""".stripMargin),
-    // transitive closure of the near-dup pairs (recursive CTE; UNION
-    // dedups, so the fixpoint terminates), canon = min over self + all
-    // reachable docs — the SQL twin of GraphX min-label propagation.
+    // closure of the near-dup pairs by 16 unrolled HashMin rounds, canon
+    // = min over self + all reachable docs — the SQL twin of the engine's
+    // min-label propagation.
     "q58_dedup_groups" ->
       s"""$dedupGroupsCtes
         |SELECT doc_id, canon_id FROM g""".stripMargin,

@@ -246,23 +246,4 @@ object Selection {
       .select(col("doc_id"), col("n_tok"), col("ttr_fp"), col("cum_tok"),
         (col("cum_tok") <= budgetTokens).cast("long").as("admitted"))
   }
-
-  /** Probe seam (R14ScaleProbe `cumsum`): [[budgetSelect]]'s running-sum
-    * kernel over an already-scored `(doc_id, n_tok, ttr_fp)` frame, so
-    * the A/B against the global window isolates the cumulative-sum plan
-    * from the shared tokenise pass. Not part of the query surface. */
-  private[graft] def runningSumForProbe(
-      scored: DataFrame, weightCol: String, out: String): DataFrame =
-    Sampling.runningSum(scored, Nil,
-      Seq(col("ttr_fp").desc, col("doc_id").asc), weightCol, out)
-
-  /** Probe seam (R15ScaleProbe `shardsink`): the grouped running-sum
-    * kernel as [[graft.ext.Packing.shardSequences]] calls it, exposed so
-    * the token-level twin shares the identical layout arithmetic. Not
-    * part of the query surface. */
-  private[graft] def runningSumForProbeGrouped(
-      df: DataFrame, groupCols: Seq[String],
-      order: Seq[org.apache.spark.sql.Column],
-      weightCol: String, out: String): DataFrame =
-    Sampling.runningSum(df, groupCols, order, weightCol, out)
 }

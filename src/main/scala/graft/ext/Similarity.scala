@@ -31,8 +31,8 @@ object Similarity {
     * hashed on the id, BEFORE per-row signature compute. A small corpus
     * is one parquet scan partition, so the tables×bits hyperplane dots
     * of [[bucketKeys]] — and everything fused after them — would run in
-    * ONE task (the serial-stage shape FUZZ_AB_r8.md measured on q89;
-    * ParProbe showed q40/q41 maxTask ≈ 0.6–0.7 × wall). The exchange
+    * ONE task (the serial-stage shape FUZZ_AB_r8.md measured on q89,
+    * and on q40/q41 at maxTask ≈ 0.6–0.7 × wall). The exchange
     * carries the raw `(id, vec)` rows — narrower than the ×tables
     * exploded signature frame — and at 100 TB, where the scan is already
     * wide, it is one bounded extra exchange next to the self-join's own
@@ -223,10 +223,11 @@ object Similarity {
     transform(ArrayOps.l2normalize(v.cast("array<double>")),
       x => floor(x * lit(1000000.0)) + lit(1000000L))
 
-  /** The scaled integer image `(id, vi)` — package-private so dev probes
-    * (IvfPqProbe's frontier sweep) replay the EXACT serving arithmetic
-    * instead of reimplementing the normalise/floor/shift chain. */
-  private[graft] def scaledImage(
+  /** The scaled integer image `(id, vi)` — shared by the IVF build and
+    * query sides so both replay the EXACT serving arithmetic (the
+    * frontier sweep of IVFPQ_FRONTIER_r9.md priced it) instead of
+    * reimplementing the normalise/floor/shift chain. */
+  private def scaledImage(
       emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(col(idCol).cast("long").as("id"),
       scaledIntVec(col(vecCol)).as("vi"))

@@ -412,12 +412,14 @@ object Analytics {
     * contract as [[kCoreBounded]]); full convergence needs
     * diameter-many rounds (the log-round star-contraction variants
     * trade that for asymmetric moves that don't replay as one SQL
-    * recurrence). Returns `(node_id, component)`.
+    * recurrence). The loop stops early once a round changes no label,
+    * so `rounds = Int.MaxValue` is the converged components.
+    * Returns `(node_id, component)`.
     *
-    * Complements [[graft.ext.Dedup.dedupGroups]]'s GraphX
-    * `connectedComponents` (the converged tier): this is the
-    * DataFrame-native recurrence a second engine replays exactly —
-    * q86 unrolls it in DuckDB and hash-compares.
+    * The engine's one connected-components kernel: bounded callers
+    * (q86, q90) get the recurrence a second engine replays exactly —
+    * q86 unrolls it in DuckDB and hash-compares — and
+    * [[graft.ext.Dedup.dedupGroups]] runs it to convergence.
     *
     * Scale shape — FRONTIER rounds: labels only decrease, so a
     * neighbour that did not change last round has nothing new to say
@@ -433,8 +435,9 @@ object Analytics {
     * `min` per receiver (the combine makes the exchange O(receivers),
     * not O(messages)), and one |V|-side left join folding the
     * improvements in while computing the next Δ. Every round's label
-    * and Δ frames pin behind barriers ([[pageRankFixed]]'s checkpoint
-    * rationale). The symmetrized edge list is built once. */
+    * frame pins behind a barrier ([[pageRankFixed]]'s checkpoint
+    * rationale); Δ is a filter over it, so it needs no pin of its own.
+    * The symmetrized edge list is built once. */
   def connectedComponentsBounded(
       edges: DataFrame,
       srcCol: String = "src",
@@ -454,9 +457,12 @@ object Analytics {
       .select(col("id"), col("id").as("lab")))
     val st = stateHint(sym.count(), checkpoint, broadcastStateBelow)
     // Δ: the senders whose label is news to their neighbours — all of
-    // them initially, then only last round's improvements
+    // them initially, then only last round's improvements. An empty Δ
+    // sends no messages, so every later round is a no-op: stop there.
     var delta = lab
-    for (_ <- 1 to rounds) {
+    var r = 0
+    while (r < rounds && (r == 0 || !delta.isEmpty)) {
+      r += 1
       val msgs = sym
         .join(st(delta.select(col("id").as("v"), col("lab"))), Seq("v"))
         .groupBy(col("u")).agg(min(col("lab")).as("m"))
@@ -465,7 +471,7 @@ object Analytics {
         .select(col("id"),
           least(col("lab"), coalesce(col("m"), col("lab"))).as("lab"),
           (col("m") < col("lab")).as("__chg")))
-      delta = pin(next.filter(col("__chg")).select(col("id"), col("lab")))
+      delta = next.filter(col("__chg")).select(col("id"), col("lab"))
       lab = next.select(col("id"), col("lab"))
     }
     lab.select(col("id").as("node_id"), col("lab").as("component"))

@@ -30,7 +30,7 @@ object GraphBuilder {
     * per build). Source data is immutable for a session (parquet fixtures),
     * so the probe is a pure function of the canonical scan plan. The row
     * count `n` doubles as the node type's id-space size hint
-    * ([[HeteroGraph.sizeHints]]) so flat propagation / GraphX layouts skip
+    * ([[HeteroGraph.sizeHints]]) so flat propagation layouts skip
     * their own eager per-type max-id aggregations. */
   /** The memoised probe (session-scoped via [[graft.functions.Memos]]):
     * `Some((lo, n))` if `df(pkCol)` holds exactly the dense integral

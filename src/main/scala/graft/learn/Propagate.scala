@@ -150,7 +150,7 @@ object Propagate {
   }
 
   /** [[meanRounds]] semantics over a FLATTENED graph: node types offset
-    * into one global Long id space (same layout as the GraphX bridge), all
+    * into one global Long id space, all
     * edge types in one tagged frame, all embeddings in one frame. At dim=1
     * the scalar twin fuses the per-type mean and the cross-type combine
     * into a SINGLE per-tag `groupBy(dst)` (tags are plan-time constants),
@@ -773,9 +773,7 @@ object Propagate {
     *
     * Scale notes: the window sorts within partitions where the agg pattern
     * hashed — for very hot destinations the sort is O(d log d) per key vs
-    * O(d), bought back by two fewer shuffles of the full edge frame;
-    * GraphX `aggregateMessages` is the drop-in alternative if edges
-    * outgrow DataFrame windows.
+    * O(d), bought back by two fewer shuffles of the full edge frame.
     */
   def attentionRounds(
       g: HeteroGraph,

@@ -424,6 +424,11 @@ class AnalyticsSpec extends SparkSpec {
         edges.toDF("src", "dst"), rounds = 6)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((10L to 16L).forall(converged(_) === 10L))
+    // unbounded: the loop stops on the first round whose Δ is empty
+    val unbounded = Analytics.connectedComponentsBounded(
+        edges.toDF("src", "dst"), rounds = Int.MaxValue)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(unbounded === converged)
   }
 
   /** Naive BFS layers from the seed set, `rounds` expansions. */

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Near-dedup family (ext/Dedup.scala): shingling, Jaccard, MinHash-LSH and
@@ -216,15 +217,58 @@ class DedupSpec extends SparkSpec {
     assert(n == 6)
   }
 
+  private def groups(
+      ids: DataFrame, pairs: DataFrame): Map[Long, Long] = {
+    val rows = Dedup.dedupGroups(ids, pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.map(_._1).distinct.length === rows.length) // one row per id
+    rows.toMap
+  }
+
+  private def groups(
+      ids: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    groups(ids.toDF("doc_id"), pairs.toDF("doc_a", "doc_b"))
+
   test("dedupGroups: chains collapse to min id, singletons stay themselves") {
-    val ids = Seq(1L, 2L, 3L, 4L, 5L, 9L).toDF("doc_id")
     // chain 3-2, 2-1 (one component {1,2,3}); pair 5-4; 9 isolated
-    val pairs = Seq((2L, 3L), (1L, 2L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val got = Dedup.dedupGroups(ids, pairs)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got === Seq(
-      (1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L), (9L, 9L)))
+    assert(groups(Seq(1L, 2L, 3L, 4L, 5L, 9L), Seq((2L, 3L), (1L, 2L), (4L, 5L))) ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
+    // pair endpoints absent from ids still get a row
+    assert(groups(Seq(1L, 2L), Seq((2L, 7L), (8L, 9L))) ===
+      Map(1L -> 1L, 2L -> 2L, 7L -> 2L, 8L -> 8L, 9L -> 8L))
+    // self-loops keep their id, inside ids or not
+    assert(groups(Seq(1L, 2L, 3L), Seq((3L, 3L), (6L, 6L), (4L, 4L), (4L, 2L))) ===
+      Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 6L -> 6L))
+  }
+
+  test("dedupGroups: a 40-node path converges past the oracle's 16 rounds") {
+    // edges listed far end first, half of them reversed
+    val path = (139L until 100L by -1L).map(i =>
+      if (i % 2 == 0) (i, i - 1) else (i - 1, i))
+    val got = groups(100L to 139L, path)
+    assert(got.size === 40)
+    assert(got.values.toSet === Set(100L))
+  }
+
+  test("dedupGroups random graph ≡ union-find, partition-independent") {
+    val rnd = new scala.util.Random(17)
+    val ids = 0L until 80L
+    // endpoints reach past the id range; a == b draws are self-loops
+    val pairs = Seq.fill(70)((rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    ids.foreach(find)
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    val want = parent.keys.map(x => x -> find(x)).toMap
+    val a = groups(ids.toDF("doc_id"), pairs.toDF("doc_a", "doc_b").repartition(7))
+    assert(a === groups(ids.toDF("doc_id"), pairs.toDF("doc_a", "doc_b").coalesce(1)))
+    assert(a === want)
   }
 
   test("dupSpanStats: equals a naive recomputation, partition-independent") {

@@ -297,7 +297,7 @@ class SkewStressSpec extends SparkSpec {
   }
 
   test("minhash LSH: a hot band bucket emits all C(H,2) true pairs exactly") {
-    // The LSH hot-band case (CurScaleProbe's skew leg, in-suite at H=200):
+    // The LSH hot-band case (SCALE_r8.md's skew leg, in-suite at H=200):
     // H near-identical docs — one shared 40-token template + a unique
     // trailing token each — share ~all band keys, so every band bucket
     // holds ~H members and the C(H,2) pair pile is born on a handful of
