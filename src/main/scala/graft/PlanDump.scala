@@ -643,6 +643,19 @@ object PlanDump {
       |excluded warm-up visible.
       |""".stripMargin
 
+  /** Renumber expression ids (`#123`) and `plan_id=` values by first
+    * appearance within one plan. Both come from JVM-global counters, so
+    * the raw numbers shift with everything that ran before; renumbered, a
+    * regenerated PLANS.md differs from the committed one only where a
+    * plan did. */
+  def stableIds(plan: String): String = {
+    def renumber(s: String, re: scala.util.matching.Regex): String = {
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      re.replaceAllIn(s, m => m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size + 1))
+    }
+    renumber(renumber(plan, "(#)([0-9]+)".r), "(plan_id=)([0-9]+)".r)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("PLANS.md")
@@ -760,7 +773,7 @@ object PlanDump {
         else SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.SimpleMode)
-      s"===== $name =====\n$plan"
+      s"===== $name =====\n${stableIds(plan)}"
     }
     // self-describing exclusions (r17 verdict Next #5) — and complete:
     // a query neither audited nor classified fails the dump loudly

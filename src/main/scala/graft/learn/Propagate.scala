@@ -77,15 +77,10 @@ object Propagate {
     thunks.map(t => Future(t())).map(f => Await.result(f, Duration.Inf))
   }
 
-  /** Dev phase timing, enabled by SPARK_GRAFT_TRAIN_PHASES=1 (stderr). */
+  /** Phase timing into [[graft.functions.Phases]] (Bench phase splits;
+    * stderr when SPARK_GRAFT_TRAIN_PHASES is set). */
   private def phase[A](name: String)(f: => A): A =
-    if (!sys.env.contains("SPARK_GRAFT_TRAIN_PHASES")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(
-        f"PROPPHASE $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+    graft.functions.Phases.time(s"propagate $name")(f)
 
   /** @param init per node type `(id: bigint, vec: array<double>)`, all of
     *             width `dim`
@@ -147,6 +142,27 @@ object Propagate {
       }
     }
     h
+  }
+
+  /** Every layer h₀…h_rounds of [[meanRounds]], one round at a time, each
+    * behind an eager concurrent [[barrier]] — the memoisable base that
+    * serving reads instead of re-propagating (`graft.serve.Recommend`).
+    * The last layer keeps only `lastTypes`; a round re-barriers only the
+    * types that received messages (the rest are the previous layer's
+    * frames). */
+  def meanLayers(
+      g: HeteroGraph,
+      init: Map[String, DataFrame],
+      rounds: Int,
+      lastTypes: Set[String]): IndexedSeq[Map[String, DataFrame]] = {
+    def pin(prev: Map[String, DataFrame], h: Map[String, DataFrame], last: Boolean) = {
+      val kept = if (last) h.filter { case (t, _) => lastTypes(t) } else h
+      val (same, upd) = kept.partition { case (t, df) => prev.get(t).exists(_ eq df) }
+      barrier(upd) ++ same
+    }
+    (1 to rounds).scanLeft(pin(Map.empty, init, rounds == 0)) { (prev, r) =>
+      pin(prev, meanRounds(g, prev, 1, checkpoint = false), r == rounds)
+    }
   }
 
   /** [[meanRounds]] semantics over a FLATTENED graph: node types offset

@@ -3,7 +3,7 @@ package graft
 import graft.catalog.{Catalogs, ConstraintCatalog, ForeignKey, TableMeta}
 import graft.graph.GraphBuilder
 import graft.topology.{EdgeKey, Topology}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end on the Chinook-shaped micro-fixture (FIXTURES.md §B) —
@@ -16,37 +16,8 @@ class ChinookSpec extends SparkSpec {
   implicit lazy val s: org.apache.spark.sql.SparkSession = spark
   import spark.implicits._
 
-  private val cat = ConstraintCatalog(Seq(
-    TableMeta("artists", Seq("ArtistId")),
-    TableMeta("albums", Seq("AlbumId"),
-      Seq(ForeignKey("ArtistId", "artists", "ArtistId"))),
-    TableMeta("genres", Seq("GenreId")),
-    TableMeta("tracks", Seq("TrackId"), Seq(
-      ForeignKey("AlbumId", "albums", "AlbumId"),
-      ForeignKey("GenreId", "genres", "GenreId"))),
-    TableMeta("playlists", Seq("PlaylistId")),
-    TableMeta("playlist_track", Seq("PlaylistId", "TrackId"), Seq(
-      ForeignKey("PlaylistId", "playlists", "PlaylistId"),
-      ForeignKey("TrackId", "tracks", "TrackId"))),
-    TableMeta("employees", Seq("EmployeeId"),
-      Seq(ForeignKey("ReportsTo", "employees", "EmployeeId")))))
-
-  private def tables: Map[String, DataFrame] = Map(
-    "artists" -> Seq((1, "AC"), (2, "BB"), (3, "CC"))
-      .toDF("ArtistId", "Name"),
-    "albums" -> Seq((1, "a1", 1), (2, "a2", 1), (3, "a3", 2))
-      .toDF("AlbumId", "Title", "ArtistId"),
-    "genres" -> Seq((1, "rock"), (2, "jazz")).toDF("GenreId", "Name"),
-    "tracks" -> Seq(
-      (1, "t1", 1, 1, 100L), (2, "t2", 1, 2, 200L),
-      (3, "t3", 2, 1, 300L), (4, "t4", 3, 2, 400L))
-      .toDF("TrackId", "Name", "AlbumId", "GenreId", "Milliseconds"),
-    "playlists" -> Seq((1, "p1"), (2, "p2")).toDF("PlaylistId", "Name"),
-    "playlist_track" -> Seq((1, 1), (1, 2), (2, 2), (2, 3), (2, 4))
-      .toDF("PlaylistId", "TrackId"),
-    "employees" -> Seq(
-      (1, Option.empty[Int]), (2, Some(1)), (3, Some(1)), (4, Some(2)))
-      .toDF("EmployeeId", "ReportsTo"))
+  import ChinookSpec.cat
+  private def tables = ChinookSpec.tables(spark)
 
   test("classification: 1-PK nodes, 2-PK junction, self-FK edge derived") {
     val topo = Topology.classify(cat)
@@ -110,5 +81,44 @@ class ChinookSpec extends SparkSpec {
     assert(rows.length == 3)
     // the seed track (id 0) must not be recommended back (J6 anti-join)
     assert(!rows.map(_.getLong(0)).contains(0L))
+  }
+}
+
+/** The Chinook-shaped micro-fixture (FIXTURES.md §B), shared with
+  * RecommendSpec. */
+object ChinookSpec {
+  val cat = ConstraintCatalog(Seq(
+    TableMeta("artists", Seq("ArtistId")),
+    TableMeta("albums", Seq("AlbumId"),
+      Seq(ForeignKey("ArtistId", "artists", "ArtistId"))),
+    TableMeta("genres", Seq("GenreId")),
+    TableMeta("tracks", Seq("TrackId"), Seq(
+      ForeignKey("AlbumId", "albums", "AlbumId"),
+      ForeignKey("GenreId", "genres", "GenreId"))),
+    TableMeta("playlists", Seq("PlaylistId")),
+    TableMeta("playlist_track", Seq("PlaylistId", "TrackId"), Seq(
+      ForeignKey("PlaylistId", "playlists", "PlaylistId"),
+      ForeignKey("TrackId", "tracks", "TrackId"))),
+    TableMeta("employees", Seq("EmployeeId"),
+      Seq(ForeignKey("ReportsTo", "employees", "EmployeeId")))))
+
+  def tables(spark: SparkSession): Map[String, DataFrame] = {
+    import spark.implicits._
+    Map(
+      "artists" -> Seq((1, "AC"), (2, "BB"), (3, "CC"))
+        .toDF("ArtistId", "Name"),
+      "albums" -> Seq((1, "a1", 1), (2, "a2", 1), (3, "a3", 2))
+        .toDF("AlbumId", "Title", "ArtistId"),
+      "genres" -> Seq((1, "rock"), (2, "jazz")).toDF("GenreId", "Name"),
+      "tracks" -> Seq(
+        (1, "t1", 1, 1, 100L), (2, "t2", 1, 2, 200L),
+        (3, "t3", 2, 1, 300L), (4, "t4", 3, 2, 400L))
+        .toDF("TrackId", "Name", "AlbumId", "GenreId", "Milliseconds"),
+      "playlists" -> Seq((1, "p1"), (2, "p2")).toDF("PlaylistId", "Name"),
+      "playlist_track" -> Seq((1, 1), (1, 2), (2, 2), (2, 3), (2, 4))
+        .toDF("PlaylistId", "TrackId"),
+      "employees" -> Seq(
+        (1, Option.empty[Int]), (2, Some(1)), (3, Some(1)), (4, Some(2)))
+        .toDF("EmployeeId", "ReportsTo"))
   }
 }

@@ -229,4 +229,14 @@ class PlanLintSpec extends SparkSpec {
     assert(bad.isEmpty,
       s"sorted limit planned as Sort+Limit (full-frame shuffle) in: ${bad.mkString(", ")}")
   }
+
+  test("PlanDump.stableIds renumbers expression and plan ids by first appearance") {
+    val raw = "Project [a#912L, b#17]\n+- Exchange hashpartitioning(a#912L, 8), " +
+      "ENSURE_REQUIREMENTS, [plan_id=301]\n   +- Filter (b#17 > 0)\n" +
+      "      +- ReusedExchange [a#4L], [plan_id=77]\n         +- [plan_id=301]"
+    assert(PlanDump.stableIds(raw) ===
+      "Project [a#1L, b#2]\n+- Exchange hashpartitioning(a#1L, 8), " +
+      "ENSURE_REQUIREMENTS, [plan_id=1]\n   +- Filter (b#2 > 0)\n" +
+      "      +- ReusedExchange [a#3L], [plan_id=2]\n         +- [plan_id=1]")
+  }
 }
