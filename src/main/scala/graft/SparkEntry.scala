@@ -629,16 +629,16 @@ r2o AS (
     "q55_propagate_bucketed" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val g = bucketedGraph(s, dir)
-      // checkpoint=false: the round-(r−1) re-computation inside round r's
-      // plan re-reads BUCKETED scans through exchange-free joins, which
-      // is cheaper than materialising an eager barrier per node type at
-      // 2 AND 4 rounds (BKT_AB, PROP_AB_r6.md — where the committed
-      // numbers also show this store+dispatch beating the unbucketed
-      // per-type twin ~7% at 2 rounds and >2× at 4: the store is both a
-      // materialisation barrier and a co-location guarantee).
+      // per-type loop, no barrier between rounds: the round-(r−1)
+      // re-computation inside round r's plan re-reads BUCKETED scans
+      // through exchange-free joins, which is cheaper than materialising
+      // an eager barrier per node type at 2 AND 4 rounds (BKT_AB,
+      // PROP_AB_r6.md — where the committed numbers also show this
+      // store+dispatch beating the unbucketed per-type twin ~7% at 2
+      // rounds and >2× at 4: the store is both a materialisation barrier
+      // and a co-location guarantee).
       val emb = graft.learn.Propagate.meanRoundsFixed(
-        g, graft.learn.Propagate.degreeInitFixedStructural(g), rounds = 2,
-        checkpoint = false)
+        g, graft.learn.Propagate.degreeInitFixedStructural(g), rounds = 2)
       // the propagation is lazy — time it where it executes (the caller's
       // action); save/load phases above already recorded eagerly. Bench
       // attributes whatever remains of q55's wall clock to this lazy tail,

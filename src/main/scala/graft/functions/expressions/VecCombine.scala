@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 /** Fused codegen cross-type combine for the propagation round update
   * (A7/G12, `model.py:92-94`): `(vec[i] + msg[i]) / (1 + nTypes)`
   * elementwise — the `zip_with(vec, msg, (a,b) -> (a+b)/(1+n))` that sits
-  * once per node per round on the dim>1 propagation path
-  * ([[graft.learn.Propagate.meanRounds]]/`meanRoundsFlat`/
-  * `attentionRounds`). Spark's higher-order functions evaluate their
+  * once per node per round on the per-type vector propagation path
+  * ([[graft.learn.Propagate.meanRounds]] and
+  * [[graft.learn.Propagate.attentionRounds]]; the flat width-1 training
+  * path combines plain doubles). Spark's higher-order functions evaluate their
   * lambdas interpreted (one `LambdaFunction` eval round-trip per element),
   * which at |V|·dim·rounds elements dominates full-width feature
   * propagation; this compiles to a primitive loop that writes one

@@ -243,7 +243,7 @@ object Recommend {
       val ballGraph = HeteroGraph(Map.empty, needed(r).toSeq.flatMap(inEdges).groupBy(_._1).map {
         case (k, es) => k -> local(es.map(e => (e._2, e._3)).sorted.toDF("src", "dst"))
       })
-      val next = Propagate.meanRounds(ballGraph, h, 1, checkpoint = false)
+      val next = Propagate.meanRounds(ballGraph, h, 1)
       delta = values(needed(r).groupBy(_._1).toSeq.map { case (t, ns) =>
         (r, t, next(t), ns.map(_._2))
       }).map { case ((_, t, id), v) => (t, id) -> v }

@@ -4,6 +4,7 @@ import graft.catalog.Catalogs
 import graft.graph.GraphBuilder
 import graft.learn._
 import graft.topology.EdgeKey
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** G9-G13: split, negative sampling, propagation, scoring, metrics. */
@@ -53,7 +54,7 @@ class LearnSpec extends SparkSpec {
 
   test("propagate: shape preserved, isolated nodes untouched, messages flow") {
     val init = Propagate.degreeInit(g)
-    val out = Propagate.meanRounds(g, init, rounds = 2, checkpoint = false)
+    val out = Propagate.meanRounds(g, init, rounds = 2)
     assert(out.keySet === init.keySet)
     out.foreach { case (t, df) =>
       assert(df.count() === g.nodes(t).count(), t)
@@ -78,21 +79,28 @@ class LearnSpec extends SparkSpec {
     assert(m("bce") > 0)
   }
 
-  test("meanRoundsFlat matches the per-type loop") {
+  test("meanRoundsFlatDegree matches the per-type loop, finalTargets too") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     val g = graft.graph.GraphBuilder
       .build(graft.catalog.Catalogs.tpch, n => Tables.load(spark, sf(), n))
       .addDegree.withReverseEdges.withSelfLoops
-    val init = Propagate.degreeInit(g)
-    val loop = Propagate.meanRounds(g, init, 2, checkpoint = false)
-    val flat = Propagate.meanRoundsFlat(g, init, 2)
-    for (t <- Seq("customer", "orders", "part")) {
-      import org.apache.spark.sql.functions._
-      val j = flat(t).select(col("id"), element_at(col("vec"), 1).as("a"))
-        .join(loop(t).select(col("id"), element_at(col("vec"), 1).as("b")), Seq("id"))
-      assert(j.count() == loop(t).count(), s"$t id sets differ")
-      assert(j.filter(abs(col("a") - col("b")) > 1e-9).count() == 0, s"$t values differ")
+    val types = g.nodes.keySet
+    // the per-type reference: meanRounds one pinned round at a time
+    val layers = Propagate.meanLayers(g, Propagate.degreeInit(g), 2, types)
+    def assertClose(got: Map[String, DataFrame], want: Map[String, DataFrame],
+        ts: Set[String], what: String): Unit = for (t <- ts) {
+      val j = got(t).select(col("id"), element_at(col("vec"), 1).as("a"))
+        .join(want(t).select(col("id"), element_at(col("vec"), 1).as("b")), Seq("id"), "full")
+      assert(j.filter(col("a").isNull || col("b").isNull || abs(col("a") - col("b")) > 1e-9)
+        .count() === 0, s"$what: $t")
     }
+    assertClose(Propagate.meanRoundsFlatDegree(g, g, types, 2, Set.empty), layers(2),
+      types, "all types")
+    // the last round updates only the targets; every other type keeps round 1
+    val targets = Set("orders", "part")
+    val partial = Propagate.meanRoundsFlatDegree(g, g, types, 2, targets)
+    assertClose(partial, layers(2), targets, "finalTargets target")
+    assertClose(partial, layers(1), types -- targets, "finalTargets non-target")
   }
 
   test("meanRoundsFixedFlat is bit-identical to the per-type loop") {
@@ -154,32 +162,14 @@ class LearnSpec extends SparkSpec {
       .addDegree.withReverseEdges.withSelfLoops
     val types = Set("customer", "orders", "events")
     val viaFeatures = Propagate.degreeInit(g3).view.filterKeys(types).toMap
-    val structural = Propagate.degreeInitStructural(g3, types)
+    // TrainLR's fused init: zero rounds return h₀ as it enters the loop
+    val structural = Propagate.meanRoundsFlatDegree(g3, g3, types, rounds = 0, Set.empty)
     for (t <- types) {
       import org.apache.spark.sql.functions._
       val j = structural(t)
         .select(col("id"), element_at(col("vec"), 1).as("a"))
         .join(viaFeatures(t)
           .select(col("id"), element_at(col("vec"), 1).as("b")), Seq("id"), "full")
-      assert(j.filter(col("a").isNull || col("b").isNull || col("a") =!= col("b"))
-        .count() === 0, t)
-    }
-  }
-
-  test("attentionRoundsFixedFlat is bit-identical to the per-type loop") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
-    val g2 = graft.graph.GraphBuilder
-      .build(graft.catalog.Catalogs.tpch, n => Tables.load(spark, sf(), n),
-        probeDense = true)
-      .withReverseEdges
-      .restrictTo(Set("customer", "nation"), 1)
-    val init = Propagate.degreeInitFixedStructural(g2, scale = 1000L)
-    val loop = Propagate.attentionRoundsFixed(g2, init, rounds = 1)
-    val flat = Propagate.attentionRoundsFixedFlat(g2, init, rounds = 1)
-    for (t <- Seq("customer", "nation")) {
-      import org.apache.spark.sql.functions._
-      val j = flat(t).withColumnRenamed("h", "a")
-        .join(loop(t).withColumnRenamed("h", "b"), Seq("id"), "full")
       assert(j.filter(col("a").isNull || col("b").isNull || col("a") =!= col("b"))
         .count() === 0, t)
     }

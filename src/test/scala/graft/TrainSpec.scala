@@ -42,7 +42,7 @@ class TrainSpec extends SparkSpec {
   test("attention rounds: shape preserved, weights renormalise messages") {
     val g = graph()
     val init = Propagate.degreeInit(g)
-    val out = Propagate.attentionRounds(g, init, rounds = 1, checkpoint = false)
+    val out = Propagate.attentionRounds(g, init, rounds = 1)
     val t = "customer"
     assert(out(t).count() == init(t).count())
     // embeddings moved for connected nodes (orders deliver messages)
