@@ -27,13 +27,20 @@ import org.apache.spark.sql.functions._
   *    callers that run several rounds either read bucketed scans through
   *    exchange-free joins (q55) or pin each layer themselves
   *    ([[meanLayers]], one round per call).
-  *  - FLAT (`flatPrep`: [[meanRoundsFlatDegree]], [[meanRoundsFixedFlat]]):
-  *    node types offset into one global id space, all edge types in one
-  *    tagged frame, per round one join + ONE fused per-tag aggregation +
-  *    one combine join, behind a `localCheckpoint` per round (the fixed
-  *    twin skips it on the last round).
-  * Which layout a caller uses is a static choice with a measured reason
-  * (the caller's comment in `SparkEntry`, `TrainLR` or `Recommend`).
+  *  - FLAT: node types offset into one global id space, all edge types in
+  *    one tagged frame, per round one join + ONE fused per-tag aggregation
+  *    + one combine join. [[meanRoundsFlatDegree]] (TrainLR) and
+  *    [[meanRoundsFixedFlat]] (q29/q43/q53) lay a graph out with
+  *    `flatPrep` and put a `localCheckpoint` behind each round (the fixed
+  *    twin skips it on the last round); serving's r-hop ball
+  *    (`Recommend`) builds its own local single-partition frames and
+  *    chains the double round body it shares with
+  *    [[meanRoundsFlatDegree]] ([[flatMessages]] + [[flatCombine]]), with
+  *    no checkpoint.
+  * Serving's memoised base layers ([[meanLayers]]) and the remaining
+  * queries run per-type. Which layout a caller uses is a static choice
+  * with a measured reason (the caller's comment in `SparkEntry`,
+  * `TrainLR` or `Recommend`).
   */
 object Propagate {
 
@@ -198,23 +205,6 @@ object Propagate {
       edges: DataFrame,
       h0: DataFrame) {
 
-    /** Per-tag Σh `s_i` and count `c_i` — the per-type means and the
-      * cross-type combine fused into ONE `groupBy(dst)` (tags are
-      * plan-time constants). */
-    def tagAggs: Seq[Column] = (0 until nTags).flatMap { tg => Seq(
-      sum(when(col("tag") === tg, col("h"))).as(s"s_$tg"),
-      count(when(col("tag") === tg, lit(1))).as(s"c_$tg")) }
-
-    /** Σ over the tags present at a destination of `mean(tag)`. */
-    def msgSum(mean: Int => Column, zero: Column): Column =
-      (0 until nTags).map(tg =>
-        when(col(s"c_$tg") > 0, mean(tg)).otherwise(zero)).reduce(_ + _)
-
-    /** The number of tags present at a destination. */
-    def nTypes: Column =
-      (0 until nTags).map(tg =>
-        when(col(s"c_$tg") > 0, lit(1L)).otherwise(lit(0L))).reduce(_ + _)
-
     /** Split a flat `(gid, h)` frame back into per-type `(id, out)`. */
     def unflatten(h: DataFrame, out: Column): Map[String, DataFrame] =
       types.map { t =>
@@ -224,6 +214,23 @@ object Propagate {
           .select((col("gid") - lo).as("id"), out)
       }.toMap
   }
+
+  /** Per-tag Σh `s_i` and count `c_i` over `nTags` edge tags — the
+    * per-type means and the cross-type combine fused into ONE
+    * `groupBy(dst)` (tags are plan-time constants). */
+  private def tagAggs(nTags: Int): Seq[Column] = (0 until nTags).flatMap { tg => Seq(
+    sum(when(col("tag") === tg, col("h"))).as(s"s_$tg"),
+    count(when(col("tag") === tg, lit(1))).as(s"c_$tg")) }
+
+  /** Σ over the tags present at a destination of `mean(tag)`. */
+  private def msgSum(nTags: Int, mean: Int => Column, zero: Column): Column =
+    (0 until nTags).map(tg =>
+      when(col(s"c_$tg") > 0, mean(tg)).otherwise(zero)).reduce(_ + _)
+
+  /** The number of tags present at a destination. */
+  private def nTypes(nTags: Int): Column =
+    (0 until nTags).map(tg =>
+      when(col(s"c_$tg") > 0, lit(1L)).otherwise(lit(0L))).reduce(_ + _)
 
   /** Lay `types` of `g` out flat. Id-space sizes come from
     * [[HeteroGraph.sizeHints]] when known (zero jobs); missing types fall
@@ -263,6 +270,43 @@ object Propagate {
     Flat(types, offsets, sizes.toMap, tagged.size, edges, h0)
   }
 
+  /** The message half of one [[meanRounds]] round at width 1 over a flat
+    * graph — edges `(src, dst, tag)` with tags `0 until nTags` (≥ 1),
+    * values `(gid, h: double)`: per destination `gid`, `msg_sum` = Σ over
+    * the tags present of the tag's mean source `h`, and `n_types` = the
+    * number of tags present. One join + ONE fused per-tag aggregation; the
+    * channel is a bare `double` column, so the arithmetic is native
+    * SUM/COUNT/division inside whole-stage codegen. [[flatCombine]] is the
+    * other half; [[meanRoundsFlatDegree]] and serving's ball
+    * (`graft.serve.Recommend`) run every round as the two.
+    *
+    * Both halves hint their joins `shuffle_hash`. Training: at fixture
+    * scale AQE prefers broadcasting h (~MBs), but the per-round broadcast
+    * pays a serial driver-side collect + HashedRelation build per round —
+    * measured slower than the shuffled hash join there, and at cluster
+    * scale h outgrows broadcast anyway. The ball: its inputs are local
+    * single-partition frames, which a hash join reads with no exchange,
+    * where a broadcast would cost a Spark job per join. */
+  private[graft] def flatMessages(edges: DataFrame, h: DataFrame, nTags: Int): DataFrame = {
+    val aggs = tagAggs(nTags)
+    edges
+      .join(h.select(col("gid").as("src"), col("h")).hint("shuffle_hash"), Seq("src"))
+      .groupBy(col("dst").as("gid"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("gid"),
+        msgSum(nTags, tg => col(s"s_$tg") / col(s"c_$tg"), lit(0.0)).as("msg_sum"),
+        nTypes(nTags).as("n_types"))
+  }
+
+  /** The combine half of the round ([[flatMessages]]): every `gid` of `h`,
+    * set to `(h + msg_sum) / (1 + n_types)` where a message arrived. */
+  private[graft] def flatCombine(h: DataFrame, msgs: DataFrame): DataFrame =
+    h.join(msgs.hint("shuffle_hash"), Seq("gid"), "left")
+      .select(col("gid"),
+        when(col("msg_sum").isNull, col("h"))
+          .otherwise((col("h") + col("msg_sum")) / (lit(1) + col("n_types")))
+          .as("h"))
+
   /** [[meanRounds]] at width 1 over the FLAT layout, with the structural
     * degree init built in the global id space: `h = 1 + incident endpoint
     * count over the ORIGINAL (non-`REVERSE_*`, non-`SELF_LOOP`) edge
@@ -273,12 +317,11 @@ object Propagate {
     * `spark.range(totalIds)` (dense ids are 0..n−1 by construction), with
     * no node-feature lineage in the plan. This is the training hot path.
     *
-    * The channel is a bare `double` column, so the per-round mean/combine
-    * arithmetic is native SUM/COUNT/division inside whole-stage codegen —
-    * no interpreted array lambdas. ONE aggregation exchange per round: the
-    * per-type mean and the cross-type combine fuse into a single
-    * `groupBy(dst)` as per-tag conditional sums (`Flat.tagAggs`), where
-    * the per-type loop pays 2·|edge types| shuffles. The round's joins
+    * Each round is [[flatMessages]] + [[flatCombine]] behind an eager
+    * `localCheckpoint`. ONE aggregation exchange per round: the per-type
+    * mean and the cross-type combine fuse into a single `groupBy(dst)` as
+    * per-tag conditional sums (`tagAggs`), where the per-type loop pays
+    * 2·|edge types| shuffles. The round's joins
     * still exchange their inputs each round (see `flatPrep`); exchange-
     * free rounds on the |E| side are available only over a PERSISTED
     * bucketed graph ([[HeteroGraph.saveBucketed]]). Float sums run in
@@ -332,25 +375,7 @@ object Propagate {
           f.edges.filter(ranges.map { case (lo, hi) =>
             col("dst") >= lo && col("dst") < hi }.reduce(_ || _))
         } else f.edges
-      val aggs = f.tagAggs
-      // shuffle_hash hints: at fixture scale AQE prefers broadcasting h
-      // (~MBs), but the per-round broadcast pays a serial driver-side
-      // collect + HashedRelation build per round — measured slower than
-      // the shuffled hash join here, and at cluster scale h outgrows
-      // broadcast anyway, so the hint pins the plan both regimes want.
-      val msgs = edges
-        .join(h.select(col("gid").as("src"), col("h")).hint("shuffle_hash"),
-          Seq("src"))
-        .groupBy(col("dst").as("gid"))
-        .agg(aggs.head, aggs.tail: _*)
-        .select(col("gid"),
-          f.msgSum(tg => col(s"s_$tg") / col(s"c_$tg"), lit(0.0)).as("msg_sum"),
-          f.nTypes.as("n_types"))
-      h = h.join(msgs.hint("shuffle_hash"), Seq("gid"), "left")
-        .select(col("gid"),
-          when(col("msg_sum").isNull, col("h"))
-            .otherwise((col("h") + col("msg_sum")) / (lit(1) + col("n_types")))
-            .as("h"))
+      h = flatCombine(h, flatMessages(edges, h, f.nTags))
         .localCheckpoint() // eager — see barrier scaladoc
     }
     f.unflatten(h, array(col("h")).as("vec"))
@@ -471,14 +496,14 @@ object Propagate {
         }.reduce(_ unionByName _))
       var h: DataFrame = f.h0
       for (r <- 1 to rounds) {
-        val aggs = f.tagAggs
+        val aggs = tagAggs(f.nTags)
         val msgs = f.edges
           .join(h.select(col("gid").as("src"), col("h")), Seq("src"))
           .groupBy(col("dst").as("gid"))
           .agg(aggs.head, aggs.tail: _*)
           .select(col("gid"),
-            f.msgSum(tg => expr(s"s_$tg div c_$tg"), lit(0L)).as("msg_sum"), // floor-mean
-            f.nTypes.as("n_types"))
+            msgSum(f.nTags, tg => expr(s"s_$tg div c_$tg"), lit(0L)).as("msg_sum"), // floor-mean
+            nTypes(f.nTags).as("n_types"))
         val next = h.join(msgs, Seq("gid"), "left")
           .select(col("gid"),
             when(col("msg_sum").isNull, col("h"))

@@ -1,7 +1,7 @@
 package graft.learn
 
 import graft.functions.ArrayOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Edge scoring (G13 — the reference's `EdgeDecoder`: embedding lookups,
@@ -10,59 +10,68 @@ import org.apache.spark.sql.functions._
   */
 object Scoring {
 
-  /** Score candidate edges `(src, dst)` against embeddings.
-    * @return (src, dst, logit, score): logit = dot(h_src, h_dst), score =
-    *         sigmoid(logit). Rank by LOGIT: sigmoid is monotone but
-    *         saturates to exactly 1.0 in float for large dots (frozen
-    *         structural embeddings are unbounded), which would erase the
-    *         ordering and leave only the tiebreak. */
+  /** The frozen §7.2 logit of one edge: `dot(h_src, h_dst)`. Rank by the
+    * LOGIT, not by its sigmoid: sigmoid is monotone but saturates to
+    * exactly 1.0 in float for large dots (frozen structural embeddings are
+    * unbounded), which would erase the ordering and leave only the
+    * tiebreak. */
+  def dotLogit(sv: Column, dv: Column): Column = ArrayOps.dot(sv, dv)
+
+  /** The TRAINED head's logit of one edge: `w · [h_src ∥ h_dst ∥
+    * h_src∘h_dst] + b`, the exact feature layout [[TrainLR]] trains on, so
+    * [[TrainedModel]] weights plug in unchanged. The dot accumulates
+    * left-to-right (codegen [[graft.functions.ArrayOps.dot]]), making the
+    * logit a deterministic per-row function of the embeddings — pure IEEE
+    * +/×, no libm — so a frozen-weight query is hash-exact against an ANSI
+    * oracle, and every caller of this one expression gets the same bits.
+    * A feature width other than `weights.length` fails the query:
+    * `ArrayOps.dot` truncates to the shorter array, so a head trained at a
+    * different embedding width would otherwise produce plausible-looking
+    * but wrong logits. */
+  def modelLogit(
+      sv: Column,
+      dv: Column,
+      weights: Array[Double],
+      intercept: Double): Column = {
+    val f = concat(sv, dv, ArrayOps.hadamard(sv, dv))
+    when(size(f) === lit(weights.length),
+      ArrayOps.dot(f, typedlit(weights.toSeq)) + lit(intercept))
+      .otherwise(raise_error(format_string(
+        "trained head: feature width %d != trained weight width " +
+          s"${weights.length} (embedding dim mismatch)",
+        size(f))).cast("double"))
+  }
+
+  /** Score candidate edges `(src, dst)` against embeddings with
+    * [[dotLogit]].
+    * @return (src, dst, logit, score): score = sigmoid(logit) */
   def scoreEdges(
       candidates: DataFrame,
       srcEmb: DataFrame,
-      dstEmb: DataFrame): DataFrame = {
+      dstEmb: DataFrame): DataFrame =
     candidates
-      .join(srcEmb.select(col("id").as("src"), col("vec").as("src_vec")), Seq("src"))
-      .join(dstEmb.select(col("id").as("dst"), col("vec").as("dst_vec")), Seq("dst"))
-      .withColumn("logit", ArrayOps.dot(col("src_vec"), col("dst_vec")))
+      .join(srcEmb.select(col("id").as("src"), col("vec").as("sv")), Seq("src"))
+      .join(dstEmb.select(col("id").as("dst"), col("vec").as("dv")), Seq("dst"))
+      .withColumn("logit", dotLogit(col("sv"), col("dv")))
       .withColumn("score", ArrayOps.sigmoid(col("logit")))
       .select(col("src"), col("dst"), col("logit"), col("score"))
-  }
 
-  /** Score candidate edges with a TRAINED head — the serving twin of the
-    * reference's checkpoint-loaded inference (`inference.py:30-41`, `:76`):
-    * `logit = w · [h_src ∥ h_dst ∥ h_src∘h_dst] + b`, the exact feature
-    * layout [[TrainLR]] trains on, so [[TrainedModel]] weights plug in
-    * unchanged. The dot accumulates left-to-right (codegen
-    * [[graft.functions.ArrayOps.dot]]), making the logit a deterministic
-    * per-row function of the embeddings — pure IEEE +/×, no libm — so a
-    * frozen-weight query is hash-exact against an ANSI oracle.
+  /** Score candidate edges with a TRAINED head ([[modelLogit]]) — the
+    * serving twin of the reference's checkpoint-loaded inference
+    * (`inference.py:30-41`, `:76`).
     * @return (src, dst, logit, score) */
   def scoreEdgesModel(
       candidates: DataFrame,
       srcEmb: DataFrame,
       dstEmb: DataFrame,
       weights: Array[Double],
-      intercept: Double): DataFrame = {
-    val w = typedlit(weights.toSeq)
+      intercept: Double): DataFrame =
     candidates
       .join(srcEmb.select(col("id").as("src"), col("vec").as("sv")), Seq("src"))
       .join(dstEmb.select(col("id").as("dst"), col("vec").as("dv")), Seq("dst"))
-      .withColumn("f",
-        concat(col("sv"), col("dv"),
-          ArrayOps.hadamard(col("sv"), col("dv"))))
-      // fail fast on width mismatch: ArrayOps.dot truncates to the shorter
-      // array, so a head trained at a different embedding width would
-      // otherwise produce plausible-looking but wrong logits
-      .withColumn("logit",
-        when(size(col("f")) === lit(weights.length),
-          ArrayOps.dot(col("f"), w) + lit(intercept))
-          .otherwise(raise_error(format_string(
-            "scoreEdgesModel: feature width %d != trained weight width " +
-              s"${weights.length} (embedding dim mismatch)",
-            size(col("f")))).cast("double")))
+      .withColumn("logit", modelLogit(col("sv"), col("dv"), weights, intercept))
       .withColumn("score", ArrayOps.sigmoid(col("logit")))
       .select(col("src"), col("dst"), col("logit"), col("score"))
-  }
 
   /** Hash-exact evaluation frame over `(logit, label)` rows (A5/A6,
     * `model.py:100-102,118,126-140`): one row of integer confusion counts

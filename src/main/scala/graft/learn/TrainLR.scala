@@ -116,6 +116,19 @@ object TrainLR {
     val nDst = phase("nDst")(g.idSpaceSize(target.dst))
     def negs(pos: DataFrame, s: Long) =
       NegativeSampling.sample(pos, allPos, nDst, s)
+    // The dst embeddings (one width-1 row per dst node, ~24 bytes in
+    // Spark's own row-size estimate) are BROADCAST when nDst of them fit
+    // the session's broadcast threshold. AQE reaches that plan at run time
+    // anyway, but the checkpointed embeddings' static size estimate is far
+    // too large, so it starts from a shuffle join and converts once the
+    // dst side's shuffle finishes: when the other side's stage has started
+    // by then, it is shuffled for nothing, and the job count, the shuffle
+    // bytes and the training frame's partitioning (so the L-BFGS sums)
+    // change from run to run with which stage wins.
+    val featEmb =
+      if (nDst * 24L <= spark.sessionState.conf.autoBroadcastJoinThreshold)
+        emb + (target.dst -> broadcast(emb(target.dst)))
+      else emb
 
     // cache: L-BFGS runs one job per iteration over this frame; without
     // the cache each iteration replays the propagation + feature-join
@@ -129,8 +142,8 @@ object TrainLR {
     // per 4 cores beyond that) so gradient computation grows with the
     // cluster while small fixtures keep the low-task fast path.
     val trainDf =
-      edgeFeatures(trainPos, emb, target, 1)
-        .unionByName(edgeFeatures(negs(trainPos, seed + 1), emb, target, 0))
+      edgeFeatures(trainPos, featEmb, target, 1)
+        .unionByName(edgeFeatures(negs(trainPos, seed + 1), featEmb, target, 0))
         .select(array_to_vector(col("f")).as("features"), col("label"))
         .coalesce(trainPartitionTarget(spark.sparkContext.defaultParallelism))
         .cache()
@@ -155,8 +168,8 @@ object TrainLR {
       "fit_obj_final" -> hist.last)
     // score validation with the learned head: sigmoid(w·(h_s∘h_d) + b)
     val valDf =
-      edgeFeatures(valPos, emb, target, 1)
-        .unionByName(edgeFeatures(negs(valPos, seed + 2), emb, target, 0))
+      edgeFeatures(valPos, featEmb, target, 1)
+        .unionByName(edgeFeatures(negs(valPos, seed + 2), featEmb, target, 0))
     val wCol = typedlit(w.toSeq)
     val scored = valDf.select(
       ArrayOps.sigmoid(

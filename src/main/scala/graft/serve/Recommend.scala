@@ -1,11 +1,13 @@
 package graft.serve
 
 import graft.graph.HeteroGraph
-import graft.functions.Memos
+import graft.functions.{ArrayOps, Memos}
 import graft.learn.{Propagate, Scoring, TrainedModel}
 import graft.topology.EdgeKey
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Top-k recommendation over a mutated graph — the port of the reference's
   * Streamlit inference flow (`inference.py:44-76`): insert a fresh source
@@ -30,8 +32,18 @@ object Recommend {
       g: HeteroGraph,
       target: EdgeKey,
       seedDst: Seq[Long])(implicit spark: SparkSession): (HeteroGraph, Long) = {
+    import spark.implicits._
     val (newId, width) = freshId(g, target)
-    (wire(g, target, seedDst, newId, width)._1, newId)
+    val srcNodes = g.nodes(target.src)
+    val feats = Array.fill(width)(0f); feats(width - 1) = seedDegree(seedDst)
+    val newNode = Seq((newId, feats)).toDF("id", "features")
+      .withColumn("pk", lit(null).cast(srcNodes.schema("pk").dataType))
+      .select(srcNodes.columns.map(col): _*)
+    val edges = seedEdges(g, target, seedDst, newId).groupBy(_._1).map { case (k, es) =>
+      k -> g.edges(k).unionByName(es.map(e => (e._2, e._3)).toDF("src", "dst"))
+    }
+    (g.copy(nodes = g.nodes + (target.src -> srcNodes.unionByName(newNode)),
+      edges = g.edges ++ edges), newId)
   }
 
   /** The new node's id (max id + 1 of `target.src`) and that type's
@@ -50,33 +62,20 @@ object Recommend {
     (head.getLong(0) + 1L, width)
   }
 
+  /** The new node's degree feature, its only non-zero one. */
+  private def seedDegree(seedDst: Seq[Long]): Float = seedDst.size + 1f
+
   private type Edge = (EdgeKey, Long, Long) // (edge type, src, dst)
 
-  /** [[addSeedNode]] for a known fresh id and feature width: the new node,
-    * its edges to the seeds, and, where the graph has those edge types,
-    * their reverses and its self-loop (G14).
-    * @return (mutated graph, the added edges — all of `newId`'s edges) */
-  private def wire(
-      g: HeteroGraph,
-      target: EdgeKey,
-      seedDst: Seq[Long],
-      newId: Long,
-      width: Int)(implicit spark: SparkSession): (HeteroGraph, Seq[Edge]) = {
-    import spark.implicits._
-    val srcNodes = g.nodes(target.src)
-    val feats = Array.fill(width)(0f); feats(width - 1) = seedDst.size + 1f
-    val newNode = Seq((newId, feats)).toDF("id", "features")
-      .withColumn("pk", lit(null).cast(srcNodes.schema("pk").dataType))
-      .select(srcNodes.columns.map(col): _*)
+  /** Every edge [[addSeedNode]] adds for the fresh id `newId`: to the
+    * seeds, and, where the graph has those edge types, their reverses and
+    * its self-loop (G14). */
+  private def seedEdges(
+      g: HeteroGraph, target: EdgeKey, seedDst: Seq[Long], newId: Long): Seq[Edge] = {
     val loopKey = EdgeKey(target.src, "SELF_LOOP", target.src)
-    val added: Seq[Edge] = seedDst.map(d => (target, newId, d)) ++
+    seedDst.map(d => (target, newId, d)) ++
       seedDst.map(d => (target.reversed, d, newId)).filter(e => g.edges.contains(e._1)) ++
       Seq((loopKey, newId, newId)).filter(e => g.edges.contains(e._1))
-    val edges = added.groupBy(_._1).map { case (k, es) =>
-      k -> g.edges(k).unionByName(es.map(e => (e._2, e._3)).toDF("src", "dst"))
-    }
-    (g.copy(nodes = g.nodes + (target.src -> srcNodes.unionByName(newNode)),
-      edges = g.edges ++ edges), added)
   }
 
   /** Full flow: mutate → `rounds` of frozen mean message passing on
@@ -89,23 +88,34 @@ object Recommend {
     * node's r-hop ball. The mutation adds edges touching `newId` only, so
     * after r rounds only B_r changes value, where B₀ = {newId} and B_r =
     * B_{r−1} ∪ the out-neighbours of B_{r−1} in the mutated graph. Round r
-    * recomputes the nodes of B_r that round r+1 or the scorer reads,
-    * through [[Propagate.meanRounds]] over their in-edge sub-graph, with
-    * in-neighbours' round r−1 values taken from the previous delta inside
-    * B_{r−1} and from the memoised base layer outside it. Candidates are
-    * scored against the base h_R, overridden inside B_R. Every collect is
-    * sized by the ball and its in-edges, never by the graph.
+    * recomputes the nodes of B_r that round r+1 or the scorer reads, over
+    * their in-edges, with in-neighbours' round r−1 values taken from the
+    * previous round inside B_{r−1} and from the memoised base layer
+    * outside it. The rounds run in the flat layout, through the round body
+    * training uses ([[Propagate.flatMessages]] + [[Propagate.flatCombine]]),
+    * all R of them in one plan. Every collect is sized by the ball and its
+    * in-edges, never by the graph.
+    *
+    * The returned frame is one scan of the memoised `(id, pk, h_R)` frame
+    * of `target.dst` plus a TakeOrderedAndProject: the seeds are filtered
+    * out, the ≤ |B_R| in-ball values and the new node's h_R enter as
+    * literals. It plans with no exchange and collects in one Spark job.
     *
     * Measured on the `serve` benchmark (`perfbench/`, local[4], TPC-H
-    * shape at ×0.01, trained head) against the full recompute this
-    * replaced: 122 → 17 Spark jobs and 5.5 → 0.12 MB of shuffle per
-    * request, median request ~4.4–5.6 s → ~1.0–1.1 s. The first request
-    * on a graph also builds the base layers, about one full recompute.
+    * shape at ×0.01, trained head): a warm request runs 4 Spark jobs —
+    * the ball's edges, its base values, the R rounds, the scoring scan —
+    * with no shuffle, and takes ~0.6 s at the median (seed 7, traced:
+    * 0.45–0.49 s to plan, including the first three jobs, and 0.07 s to
+    * collect). The per-type ball rounds and join-based scoring this
+    * replaced ran 17 jobs in ~1.1 s; the full recompute before them, 122
+    * jobs in ~4.4–5.6 s. The first request on a graph also builds the base
+    * layers, about one full recompute.
     *
     * With `model = Some(trained)` the candidates are scored by the TRAINED
-    * head over `[h_s ∥ h_d ∥ h_s∘h_d]` (the reference's checkpoint-loaded
-    * serving, `inference.py:30-41`); with `None` the frozen §7.2 dot scorer
-    * applies. Load a persisted head with [[ModelStore.load]].
+    * head over `[h_s ∥ h_d ∥ h_s∘h_d]` ([[Scoring.modelLogit]], the
+    * reference's checkpoint-loaded serving, `inference.py:30-41`); with
+    * `None` the frozen §7.2 dot scorer ([[Scoring.dotLogit]]) applies.
+    * Load a persisted head with [[ModelStore.load]].
     * @return (id, pk, logit, score) of the k best candidates */
   def recommend(
       g: HeteroGraph,
@@ -115,46 +125,35 @@ object Recommend {
       rounds: Int = 2,
       model: Option[TrainedModel] = None)(implicit spark: SparkSession): DataFrame = {
     val base = Base(g, target, rounds)
-    val newId = base.newId
-    val (mutated, added) = wire(g, target, seedDst, newId, base.width)
-    val delta = ballDelta(mutated, added, base.layers, target, newId, seedDst.toSet, rounds)
-    // exclude the freshly inserted node from candidates ONLY when src and
-    // dst are the same node type: newId lives in the src id space, so for
-    // hetero targets comparing it against dst ids would silently drop the
-    // unrelated dst node that happens to share the number
-    val candidates = mutated.nodes(target.dst).select(col("id"))
-      .filter(!col("id").isin(                            // J6
-        (if (target.isSelfType) seedDst :+ newId else seedDst): _*))
-      .select(lit(newId).as("src"), col("id").as("dst"))
-    // every candidate's src is the constant newId, so the src equi-key
-    // constant-folds away; the src side is the one seed row, BROADCAST —
-    // otherwise the planner pairs a data-scale candidate frame with an
-    // unhinted 1-row frame as a CartesianProduct
-    val seedEmb = broadcast(vecFrame(Seq(newId -> delta((target.src, newId)))))
-    val inBall = delta.collect { case ((t, id), v) if t == target.dst => id -> v }
-    val dstEmb = base.layers(rounds)(target.dst)
-      .filter(!col("id").isin(inBall.keys.toSeq: _*))
-      .unionByName(vecFrame(inBall.toSeq))
-    val scored = model match {
-      case Some(m) =>
-        Scoring.scoreEdgesModel(candidates, seedEmb, dstEmb, m.weights, m.intercept)
-      case None =>
-        Scoring.scoreEdges(candidates, seedEmb, dstEmb)
+    val seedNode: Node = (target.src, base.newId)
+    val delta = ballDelta(g, seedEdges(g, target, seedDst, base.newId), base.layers,
+      target, seedNode, seedDst, rounds)
+    val seedVec = typedlit(delta(seedNode).toSeq)
+    // h_R inside the ball overrides the base value; a missing map key
+    // reads null (also under ANSI), which keeps the base value
+    val inBall = (delta - seedNode).collect { case ((t, id), v) if t == target.dst => id -> v.toSeq }
+    val dv = coalesce(element_at(typedlit(inBall), col("id")), col("vec"))
+    val logit = model match {
+      case Some(m) => Scoring.modelLogit(seedVec, dv, m.weights, m.intercept)
+      case None    => Scoring.dotLogit(seedVec, dv)
     }
-    scored
-      .join(mutated.nodes(target.dst).select(col("id").as("dst"), col("pk")), Seq("dst"))
-      .select(col("dst").as("id"), col("pk"), col("logit"), col("score"))
+    base.scores
+      // J6: the candidates are every non-seed dst node; newId, a src-type
+      // id, is no row of the unmutated graph's dst frame
+      .filter(!col("id").isin(seedDst: _*))
+      .select(col("id"), col("pk"), logit.as("logit"))
+      .withColumn("score", ArrayOps.sigmoid(col("logit")))
       .orderBy(desc("logit"), asc("id"))                   // rank by logit:
       .limit(k)                                            // W4 TakeOrderedAndProject
   }
 
   /** What every request on one graph shares, computed once per graph: the
-    * unmutated graph's layers h₀…h_R on degree-initialised embeddings
-    * ([[Propagate.meanLayers]]; the last layer only for `target.dst`, the
-    * one type the scorer reads there) and the new node's fresh id and
-    * feature width. */
+    * unmutated graph's layers h₀…h_{R−1} on degree-initialised embeddings
+    * ([[Propagate.meanLayers]]), the pinned `(id, pk, vec)` frame of h_R
+    * for `target.dst` (the one type and layer the scorer reads), and the
+    * new node's fresh id. */
   private final case class Base(
-      layers: IndexedSeq[Map[String, DataFrame]], newId: Long, width: Int)
+      layers: IndexedSeq[Map[String, DataFrame]], scores: DataFrame, newId: Long)
 
   private object Base {
     /** Memoised on the canonical plans of every node and edge frame, so a
@@ -168,40 +167,46 @@ object Recommend {
           .sortBy(_._1)
       Memos.getOrElseUpdate(spark, ("serve-base",
         plans[String](g.nodes, identity), plans[EdgeKey](g.edges, _.name), target, rounds)) {
-        val (newId, width) = freshId(g, target)
-        Base(Propagate.meanLayers(g, Propagate.degreeInit(g), rounds, Set(target.dst)),
-          newId, width)
+        val (newId, _) = freshId(g, target)
+        val layers = Propagate.meanLayers(g, Propagate.degreeInit(g), rounds, Set(target.dst))
+        val scores = layers(rounds)(target.dst)
+          .join(g.nodes(target.dst).select(col("id"), col("pk")), Seq("id"))
+          .localCheckpoint(eager = true)
+        Base(layers.init, scores, newId)
       }
     }
   }
 
   private type Node = (String, Long) // (node type, id)
 
-  /** h_R of every node the scorer reads inside the ball B_R: `newId` and
-    * the `target.dst` nodes of B_R that are not seeds (see [[recommend]]).
-    * `newId`'s own edges are `added`; the rest is read in at most R Spark
-    * jobs (hop r ≥ 2 reads B_{r−1}'s out-edges together with its
-    * in-edges, a last one any in-edges the scorer's nodes still lack), one
-    * job of base values, and R ball rounds, each sized by the ball and
-    * its in-edges. */
+  /** h_R of every node the scorer reads inside the ball B_R: the new node
+    * `seedNode` and the `target.dst` nodes of B_R that are not seeds (see
+    * [[recommend]]). `seedNode`'s edges are `added`; the rest is read in
+    * at most R Spark jobs (hop r ≥ 2 reads B_{r−1}'s out-edges together
+    * with its in-edges, a last one any in-edges the scorer's nodes still
+    * lack), then one job of base values, then one job for all R ball
+    * rounds: one local single-partition plan, with no exchange, sized by
+    * the ball and its in-edges. */
   private def ballDelta(
-      mutated: HeteroGraph,
+      g: HeteroGraph,
       added: Seq[Edge],
       base: IndexedSeq[Map[String, DataFrame]],
       target: EdgeKey,
-      newId: Long,
-      seeds: Set[Long],
+      seedNode: Node,
+      seedDst: Seq[Long],
       rounds: Int)(implicit spark: SparkSession): Map[Node, Array[Double]] = {
-    import spark.implicits._
     def src(e: Edge): Node = (e._1.src, e._2)
     def dst(e: Edge): Node = (e._1.dst, e._3)
-    val seedNode: Node = (target.src, newId)
+    val seeds = seedDst.toSet
     // in-edges per node, multi-edges kept; the fresh node's are all added
     var inEdges = Map(seedNode -> added.filter(dst(_) == seedNode))
     def readInto(from: Set[Node], into: Set[Node]): Seq[Edge] = {
-      val es = edgesTouching(mutated, from, into -- inEdges.keySet)
+      val lacking = into -- inEdges.keySet
+      // the graph's edges, plus the added ones only the mutation holds
+      val es = edgesTouching(g, from, lacking) ++
+        added.filter(e => from(src(e)) || lacking(dst(e)))
       val byDst = es.groupBy(dst)
-      inEdges ++= (into -- inEdges.keySet).map(n => n -> byDst.getOrElse(n, Nil))
+      inEdges ++= lacking.map(n => n -> byDst.getOrElse(n, Nil))
       es
     }
     // B_0 … B_R, each hop expanding only the previous hop's new nodes
@@ -222,34 +227,59 @@ object Recommend {
     val needed = (rounds to 1 by -1)
       .scanLeft(scorerReads)((ns, r) => balls(r - 1).intersect(inputs(ns))).reverse
     // round r reads h_{r−1} of needed(r) and of its in-neighbours: from the
-    // previous round's delta inside B_{r−1} (exactly needed(r − 1)), from
-    // the base layer outside it; newId's h₀ is the mutated graph's own init
+    // previous round inside B_{r−1} (exactly needed(r − 1)), from the base
+    // layer outside it; the new node's h₀ is its degree feature
     val fromBase = (1 to rounds).map(r => inputs(needed(r)) -- balls(r - 1))
     val baseVals = values(
       (1 to rounds).flatMap { r =>
         fromBase(r - 1).groupBy(_._1).map { case (t, ns) =>
           (r - 1, t, base(r - 1)(t), ns.map(_._2))
         }
-      } :+ ((0, target.src, Propagate.degreeInit(mutated)(target.src), Set(newId))))
-    // the ball frames are small and local: one partition each, joined by
-    // hash without an exchange, so an edge type costs no Spark job of its own
-    def local(df: DataFrame) = df.coalesce(1).hint("shuffle_hash")
-    var delta = Map(seedNode -> baseVals((0, target.src, newId)))
+      }).map { case ((r, t, id), v) => (r, (t, id)) -> v.head }
+    // the flat layout over the ball: every node a round reads gets a dense
+    // gid in (type, id) order, every edge type a tag in name order; rows and
+    // edges enter sorted, so the sums run in one order whatever order the
+    // collects returned, and a repeated request answers bit-identically
+    val gid = (seedNode +: (1 to rounds).flatMap(r => inputs(needed(r)))).distinct.sorted
+      .zipWithIndex.map { case (n, i) => n -> i.toLong }.toMap
+    val node = gid.map(_.swap)
+    val ins = (1 to rounds).map(r => needed(r).toSeq.flatMap(inEdges))
+    val tag = ins.flatten.map(_._1).distinct.sortBy(_.name).zipWithIndex.toMap
+    // Every input frame is local and one partition, so the R rounds' hash
+    // joins and aggregates chain into one plan with no exchange: one Spark
+    // job. A join's output is one partition too but does not say so:
+    // coalesce(1) declares it. The limits are those outputs' exact row
+    // counts, known here: without them the planner estimates a join as the
+    // product of its inputs' sizes, and above
+    // spark.sql.maxSinglePartitionBytes it shuffles even single-partition
+    // inputs.
+    def local(rows: Seq[Product], schema: StructType) =
+      spark.createDataFrame(rows.map(Row.fromTuple).asJava, schema).coalesce(1)
+    def baseRows(r: Int) = fromBase(r).toSeq.map(n => (gid(n), baseVals((r, n))))
+    var h = local(((gid(seedNode), seedDegree(seedDst).toDouble) +: baseRows(0)).sortBy(_._1),
+      hSchema)
     for (r <- 1 to rounds) {
-      val h = (fromBase(r - 1).map(n => n -> baseVals((r - 1, n._1, n._2))) ++ delta)
-        .groupBy(_._1._1).map { case (t, vs) =>
-          t -> local(vecFrame(vs.toSeq.map { case ((_, id), v) => id -> v }))
-        }
-      val ballGraph = HeteroGraph(Map.empty, needed(r).toSeq.flatMap(inEdges).groupBy(_._1).map {
-        case (k, es) => k -> local(es.map(e => (e._2, e._3)).sorted.toDF("src", "dst"))
-      })
-      val next = Propagate.meanRounds(ballGraph, h, 1)
-      delta = values(needed(r).groupBy(_._1).toSeq.map { case (t, ns) =>
-        (r, t, next(t), ns.map(_._2))
-      }).map { case ((_, t, id), v) => (t, id) -> v }
+      val edges = local(ins(r - 1).map(e => (gid(src(e)), gid(dst(e)), tag(e._1))).sorted,
+        edgeSchema)
+      // no in-edge anywhere in the ball: every round is the identity
+      val out = if (tag.isEmpty) h else Propagate.flatCombine(h,
+        Propagate.flatMessages(edges, h, tag.size)
+          .coalesce(1).limit(ins(r - 1).map(dst).distinct.size))
+      // round r+1 reads needed(r) from this round, the rest from the base
+      h = if (r == rounds) out
+        else out.filter(col("gid").isin(needed(r).toSeq.map(gid): _*))
+          .unionByName(local(baseRows(r).sortBy(_._1), hSchema))
+          .coalesce(1).limit(inputs(needed(r + 1)).size)
     }
-    delta
+    h.collect().map(row => node(row.getLong(0)) -> row.getDouble(1)).collect {
+      case (n, v) if needed(rounds)(n) => n -> Array(v)
+    }.toMap
   }
+
+  private val hSchema = StructType(Seq(
+    StructField("gid", LongType, nullable = false), StructField("h", DoubleType, nullable = false)))
+  private val edgeSchema = StructType(Seq(StructField("src", LongType, nullable = false),
+    StructField("dst", LongType, nullable = false), StructField("tag", IntegerType, nullable = false)))
 
   /** Edges of `g` leaving one of `from` or entering one of `into`, every
     * edge type in one Spark job (none when both are empty), multi-edges
@@ -285,12 +315,4 @@ object Recommend {
       .map { case (df, i) => df.select(lit(i).as("part") +: df.columns.map(col): _*) }
       .reduce(_ unionByName _).collect().toSeq.map(r => r.getInt(0) -> r)
 
-  /** A local `(id, vec)` frame. Rows and edges enter the ball rounds
-    * sorted, so their sums run in one order whatever order the collects
-    * returned: a repeated request answers bit-identically. */
-  private def vecFrame(rows: Seq[(Long, Array[Double])])(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    rows.sortBy(_._1).toDF("id", "vec")
-  }
 }

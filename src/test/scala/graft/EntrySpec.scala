@@ -13,6 +13,26 @@ class EntrySpec extends SparkSpec {
     assert(r1.map(_.getLong(0)).toSeq === r2.map(_.getLong(0)).toSeq)
   }
 
+  test("entry answers the pinned flagship top-10: ids, pks, logits to 1e-12") {
+    // (id, pk, logit) of SparkEntry.entry at sf0.001, local[4], captured
+    // from the per-type ball rounds before serving moved them to the flat
+    // layout; no oracle covers this answer, so this pin is what notices a
+    // change to it
+    val want = Seq(
+      (7L, 7L, 539.1731616748369), (144L, 144L, 538.1524934286483),
+      (4L, 4L, 493.0685619126402), (127L, 127L, 482.54008491725284),
+      (72L, 72L, 477.27543930374145), (48L, 48L, 475.9555805053678),
+      (80L, 80L, 471.4461642280969), (121L, 121L, 467.8135304214198),
+      (109L, 109L, 466.22926981033226), (35L, 35L, 465.03687354954707))
+    val got = SparkEntry.entry(spark).collect()
+    assert(got.map(r => (r.getLong(0), r.getAs[Number]("pk").longValue)).toSeq ===
+      want.map(w => (w._1, w._2)))
+    got.zip(want).foreach { case (r, (id, _, logit)) =>
+      assert(math.abs(r.getDouble(2) - logit) <= 1e-12 * math.abs(logit),
+        s"id $id logit ${r.getDouble(2)} vs $logit")
+    }
+  }
+
   test("entry(dir) respects the caller's scale factor") {
     val small = SparkEntry.entry(spark, "/root/testdata/sf0.001").collect()
     val mid = SparkEntry.entry(spark, "/root/testdata/sf0.01").collect()

@@ -6,6 +6,10 @@ import graft.learn.{Propagate, Scoring, TrainedModel}
 import graft.serve.Recommend
 import graft.topology.EdgeKey
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
 /** Incremental serving ([[Recommend.recommend]]: memoised base layers plus
@@ -169,7 +173,13 @@ class RecommendSpec extends SparkSpec {
     assert(again.toSeq === first.toSeq)
   }
 
-  test("a warm recommend on a materialised sf0.001 graph runs at most 17 Spark jobs") {
+  /** Every operator of an executed plan, inside an AQE wrapper too. */
+  private def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: operators(a.executedPlan)
+    case _ => p +: p.children.flatMap(operators)
+  }
+
+  test("a warm recommend on a materialised sf0.001 graph runs at most 4 Spark jobs: one scan plus a top-k, no exchange") {
     val g = entryGraph
     // the first request builds the memoised base layers
     Recommend.recommend(g, ordersPart, Seq(1L, 2L, 3L), 10, model = Some(head)).collect()
@@ -182,11 +192,32 @@ class RecommendSpec extends SparkSpec {
     org.apache.spark.ListenerDrain.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
-      val rows = Recommend
-        .recommend(g, ordersPart, Seq(4L, 5L), 10, model = Some(head)).collect()
+      val df = Recommend.recommend(g, ordersPart, Seq(4L, 5L), 10, model = Some(head))
+      val rows = df.collect()
       assert(rows.length === 10)
       org.apache.spark.ListenerDrain.drain(spark.sparkContext)
-      assert(jobs.get() <= 17, s"warm recommend ran ${jobs.get()} Spark jobs")
+      assert(jobs.get() <= 4, s"warm recommend ran ${jobs.get()} Spark jobs")
+      // the per-request plan PlanLintSpec never sees: no exchange, no
+      // all-pairs join, the sorted limit as TakeOrderedAndProject
+      val plan = operators(df.queryExecution.executedPlan)
+      assert(plan.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+        df.queryExecution.executedPlan.treeString)
+      val bad = plan.collect {
+        case p @ (_: Exchange | _: CartesianProductExec | _: BroadcastNestedLoopJoinExec) =>
+          p.nodeName
+      }
+      assert(bad.isEmpty, df.queryExecution.executedPlan.treeString)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a head of another weight width fails the request, not its logits") {
+    // width-1 embeddings give 3 features; this head was trained on 4
+    val wide = TrainedModel(Array(0.37, -0.21, 0.013, 0.5), 0.05, Map.empty)
+    val e = intercept[Exception](
+      Recommend.recommend(synthetic, rates, Seq(0L, 1L), 5, model = Some(wide)).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).toSeq
+    assert(messages.exists(_.contains("feature width 3 != trained weight width 4")),
+      messages.mkString("\n"))
   }
 }
