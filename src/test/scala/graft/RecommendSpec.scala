@@ -179,7 +179,10 @@ class RecommendSpec extends SparkSpec {
     case _ => p +: p.children.flatMap(operators)
   }
 
-  test("a warm recommend on a materialised sf0.001 graph runs at most 4 Spark jobs: one scan plus a top-k, no exchange") {
+  /** One warm request on the materialised sf0.001 graph, after a first
+    * request built the memoised base layers: the answer, its rows and the
+    * Spark jobs it ran. Shared by the two budget tests below. */
+  private lazy val warmRequest: (DataFrame, Array[Row], Int) = {
     val g = entryGraph
     // the first request builds the memoised base layers
     Recommend.recommend(g, ordersPart, Seq(1L, 2L, 3L), 10, model = Some(head)).collect()
@@ -194,20 +197,32 @@ class RecommendSpec extends SparkSpec {
     try {
       val df = Recommend.recommend(g, ordersPart, Seq(4L, 5L), 10, model = Some(head))
       val rows = df.collect()
-      assert(rows.length === 10)
       org.apache.spark.ListenerDrain.drain(spark.sparkContext)
-      assert(jobs.get() <= 4, s"warm recommend ran ${jobs.get()} Spark jobs")
-      // the per-request plan PlanLintSpec never sees: no exchange, no
-      // all-pairs join, the sorted limit as TakeOrderedAndProject
-      val plan = operators(df.queryExecution.executedPlan)
-      assert(plan.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
-        df.queryExecution.executedPlan.treeString)
-      val bad = plan.collect {
-        case p @ (_: Exchange | _: CartesianProductExec | _: BroadcastNestedLoopJoinExec) =>
-          p.nodeName
-      }
-      assert(bad.isEmpty, df.queryExecution.executedPlan.treeString)
+      (df, rows, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a warm recommend on a materialised sf0.001 graph runs at most 17 Spark jobs") {
+    // the long-standing budget; the next test holds a request to its 4 jobs
+    val (_, rows, jobs) = warmRequest
+    assert(rows.length === 10)
+    assert(jobs <= 17, s"warm recommend ran $jobs Spark jobs")
+  }
+
+  test("a warm recommend on a materialised sf0.001 graph runs at most 4 Spark jobs: one scan plus a top-k, no exchange") {
+    val (df, rows, jobs) = warmRequest
+    assert(rows.length === 10)
+    assert(jobs <= 4, s"warm recommend ran $jobs Spark jobs")
+    // the per-request plan PlanLintSpec never sees: no exchange, no
+    // all-pairs join, the sorted limit as TakeOrderedAndProject
+    val plan = operators(df.queryExecution.executedPlan)
+    assert(plan.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+      df.queryExecution.executedPlan.treeString)
+    val bad = plan.collect {
+      case p @ (_: Exchange | _: CartesianProductExec | _: BroadcastNestedLoopJoinExec) =>
+        p.nodeName
+    }
+    assert(bad.isEmpty, df.queryExecution.executedPlan.treeString)
   }
 
   test("a head of another weight width fails the request, not its logits") {
