@@ -33,11 +33,12 @@ import org.apache.spark.sql.functions._
   *    [[meanRoundsFixedFlat]] (q29/q43/q53) lay a graph out with
   *    `flatPrep` and put a `localCheckpoint` behind each round (the fixed
   *    twin skips it on the last round); serving's r-hop ball
-  *    (`Recommend`) builds its own local single-partition frames and
-  *    chains the double round body it shares with
-  *    [[meanRoundsFlatDegree]] ([[flatMessages]] + [[flatCombine]]), with
-  *    no checkpoint.
-  * Serving's memoised base layers ([[meanLayers]]) and the remaining
+  *    (`Recommend`, ~100 rows) lays its nodes and edge types out on the
+  *    driver and runs each round there ([[flatRound]]: the round body of
+  *    [[meanRoundsFlatDegree]], [[flatMessages]] + [[flatCombine]], as
+  *    plain arithmetic in the same summation order), with no Spark job.
+  * Serving's memoised base layers ([[meanLayers]] for h₀…h_{R−1}, one
+  * [[meanRounds]] round for the scored type's h_R) and the remaining
   * queries run per-type. Which layout a caller uses is a static choice
   * with a measured reason (the caller's comment in `SparkEntry`,
   * `TrainLR` or `Recommend`).
@@ -169,22 +170,17 @@ object Propagate {
   /** Every layer h₀…h_rounds of [[meanRounds]], one round at a time, each
     * behind an eager concurrent [[barrier]] — the memoisable base that
     * serving reads instead of re-propagating (`graft.serve.Recommend`).
-    * The last layer keeps only `lastTypes`; a round re-barriers only the
-    * types that received messages (the rest are the previous layer's
-    * frames). */
+    * A round re-barriers only the types that received messages (the rest
+    * are the previous layer's frames). */
   def meanLayers(
       g: HeteroGraph,
       init: Map[String, DataFrame],
-      rounds: Int,
-      lastTypes: Set[String]): IndexedSeq[Map[String, DataFrame]] = {
-    def pin(prev: Map[String, DataFrame], h: Map[String, DataFrame], last: Boolean) = {
-      val kept = if (last) h.filter { case (t, _) => lastTypes(t) } else h
-      val (same, upd) = kept.partition { case (t, df) => prev.get(t).exists(_ eq df) }
+      rounds: Int): IndexedSeq[Map[String, DataFrame]] = {
+    def pin(prev: Map[String, DataFrame], h: Map[String, DataFrame]) = {
+      val (same, upd) = h.partition { case (t, df) => prev.get(t).exists(_ eq df) }
       barrier(upd) ++ same
     }
-    (1 to rounds).scanLeft(pin(Map.empty, init, rounds == 0)) { (prev, r) =>
-      pin(prev, meanRounds(g, prev, 1), r == rounds)
-    }
+    (1 to rounds).scanLeft(pin(Map.empty, init))((prev, _) => pin(prev, meanRounds(g, prev, 1)))
   }
 
   /** The session's configured shuffle parallelism — the target partition
@@ -277,16 +273,14 @@ object Propagate {
     * number of tags present. One join + ONE fused per-tag aggregation; the
     * channel is a bare `double` column, so the arithmetic is native
     * SUM/COUNT/division inside whole-stage codegen. [[flatCombine]] is the
-    * other half; [[meanRoundsFlatDegree]] and serving's ball
-    * (`graft.serve.Recommend`) run every round as the two.
+    * other half; [[meanRoundsFlatDegree]] runs every round as the two,
+    * and [[flatRound]] is the same round on the driver.
     *
-    * Both halves hint their joins `shuffle_hash`. Training: at fixture
-    * scale AQE prefers broadcasting h (~MBs), but the per-round broadcast
-    * pays a serial driver-side collect + HashedRelation build per round —
+    * Both halves hint their joins `shuffle_hash`: at fixture scale AQE
+    * prefers broadcasting h (~MBs), but the per-round broadcast pays a
+    * serial driver-side collect + HashedRelation build per round —
     * measured slower than the shuffled hash join there, and at cluster
-    * scale h outgrows broadcast anyway. The ball: its inputs are local
-    * single-partition frames, which a hash join reads with no exchange,
-    * where a broadcast would cost a Spark job per join. */
+    * scale h outgrows broadcast anyway. */
   private[graft] def flatMessages(edges: DataFrame, h: DataFrame, nTags: Int): DataFrame = {
     val aggs = tagAggs(nTags)
     edges
@@ -306,6 +300,31 @@ object Propagate {
         when(col("msg_sum").isNull, col("h"))
           .otherwise((col("h") + col("msg_sum")) / (lit(1) + col("n_types")))
           .as("h"))
+
+  /** [[flatMessages]] + [[flatCombine]] on the driver, over values `h`
+    * (gid → h) and `edges` `(src, dst, tag)` with tags `0 until nTags`:
+    * the recurrence's one local copy, for serving's r-hop ball
+    * (`graft.serve.Recommend`), whose ~100 rows need no dataflow plan. Per
+    * destination and tag, Σh and the count accumulate in the order of
+    * `edges`, and the tags' means fold left in tag order (0 where a tag is
+    * absent) — the order a single-partition Spark round sums in, its hash
+    * join streaming the edges — so on the same edge order the two agree
+    * bit for bit (LearnSpec). As there, an edge whose source has no value
+    * delivers nothing, and a destination outside `h` is not returned. */
+  private[graft] def flatRound(
+      h: Map[Long, Double], edges: Seq[(Long, Long, Int)], nTags: Int): Map[Long, Double] = {
+    val in = edges.collect { case (src, dst, tag) if h.contains(src) => (dst, tag, h(src)) }
+      .groupBy(_._1)
+    h.map { case (gid, v) =>
+      gid -> in.get(gid).fold(v) { msgs =>
+        val byTag = (0 until nTags).map(tg => msgs.collect { case (_, `tg`, x) => x })
+        val msgSum = byTag
+          .map(xs => if (xs.isEmpty) 0.0 else xs.foldLeft(0.0)(_ + _) / xs.size)
+          .reduce(_ + _)
+        (v + msgSum) / (1 + byTag.count(_.nonEmpty))
+      }
+    }
+  }
 
   /** [[meanRounds]] at width 1 over the FLAT layout, with the structural
     * degree init built in the global id space: `h = 1 + incident endpoint

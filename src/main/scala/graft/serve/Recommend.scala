@@ -5,9 +5,7 @@ import graft.functions.{ArrayOps, Memos}
 import graft.learn.{Propagate, Scoring, TrainedModel}
 import graft.topology.EdgeKey
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Top-k recommendation over a mutated graph — the port of the reference's
   * Streamlit inference flow (`inference.py:44-76`): insert a fresh source
@@ -91,25 +89,32 @@ object Recommend {
     * recomputes the nodes of B_r that round r+1 or the scorer reads, over
     * their in-edges, with in-neighbours' round r−1 values taken from the
     * previous round inside B_{r−1} and from the memoised base layer
-    * outside it. The rounds run in the flat layout, through the round body
-    * training uses ([[Propagate.flatMessages]] + [[Propagate.flatCombine]]),
-    * all R of them in one plan. Every collect is sized by the ball and its
-    * in-edges, never by the graph.
+    * outside it. The rounds run in the flat layout on the driver
+    * ([[Propagate.flatRound]]: training's round body,
+    * [[Propagate.flatMessages]] + [[Propagate.flatCombine]], as plain
+    * arithmetic in the same summation order); the ball is ~100 rows, which
+    * a Spark plan would take longer to plan than to run. Every collect is
+    * sized by the ball and its in-edges, never by the graph.
     *
     * The returned frame is one scan of the memoised `(id, pk, h_R)` frame
     * of `target.dst` plus a TakeOrderedAndProject: the seeds are filtered
     * out, the ≤ |B_R| in-ball values and the new node's h_R enter as
     * literals. It plans with no exchange and collects in one Spark job.
+    * Every request-specific value of a plan (id lists, the in-ball map, the
+    * seed row) is a literal that generated code reads by reference, so a
+    * warm request compiles no new codegen class.
     *
     * Measured on the `serve` benchmark (`perfbench/`, local[4], TPC-H
-    * shape at ×0.01, trained head): a warm request runs 4 Spark jobs —
-    * the ball's edges, its base values, the R rounds, the scoring scan —
-    * with no shuffle, and takes ~0.6 s at the median (seed 7, traced:
-    * 0.45–0.49 s to plan, including the first three jobs, and 0.07 s to
-    * collect). The per-type ball rounds and join-based scoring this
-    * replaced ran 17 jobs in ~1.1 s; the full recompute before them, 122
-    * jobs in ~4.4–5.6 s. The first request on a graph also builds the base
-    * layers, about one full recompute.
+    * shape at ×0.01, trained head): a warm request runs 3 Spark jobs —
+    * the ball's edges, its base values, the scoring scan — with no
+    * shuffle and no codegen compile, and takes ~0.14 s at the median
+    * (seed 7, traced: 0.11–0.12 s to plan, including the first two jobs,
+    * and 0.03–0.04 s to collect). The single-partition Spark plan of the
+    * ball rounds this replaced ran 4 jobs in ~0.5 s and compiled ~21
+    * codegen classes per request; the per-type ball rounds and join-based
+    * scoring before it, 17 jobs in ~1.1 s; the full recompute before them,
+    * 122 jobs in ~4.4–5.6 s. The first request on a graph also builds the
+    * base layers, about one full recompute.
     *
     * With `model = Some(trained)` the candidates are scored by the TRAINED
     * head over `[h_s ∥ h_d ∥ h_s∘h_d]` ([[Scoring.modelLogit]], the
@@ -124,6 +129,7 @@ object Recommend {
       k: Int,
       rounds: Int = 2,
       model: Option[TrainedModel] = None)(implicit spark: SparkSession): DataFrame = {
+    require(rounds >= 1, s"recommend: rounds = $rounds, need at least one round")
     val base = Base(g, target, rounds)
     val seedNode: Node = (target.src, base.newId)
     val delta = ballDelta(g, seedEdges(g, target, seedDst, base.newId), base.layers,
@@ -140,7 +146,7 @@ object Recommend {
     base.scores
       // J6: the candidates are every non-seed dst node; newId, a src-type
       // id, is no row of the unmutated graph's dst frame
-      .filter(!col("id").isin(seedDst: _*))
+      .filter(!among(seedDst, col("id")))
       .select(col("id"), col("pk"), logit.as("logit"))
       .withColumn("score", ArrayOps.sigmoid(col("logit")))
       .orderBy(desc("logit"), asc("id"))                   // rank by logit:
@@ -168,11 +174,13 @@ object Recommend {
       Memos.getOrElseUpdate(spark, ("serve-base",
         plans[String](g.nodes, identity), plans[EdgeKey](g.edges, _.name), target, rounds)) {
         val (newId, _) = freshId(g, target)
-        val layers = Propagate.meanLayers(g, Propagate.degreeInit(g), rounds, Set(target.dst))
-        val scores = layers(rounds)(target.dst)
+        val layers = Propagate.meanLayers(g, Propagate.degreeInit(g), rounds - 1)
+        // round R for target.dst only, unpinned, straight into the one
+        // pinned frame the scorer scans
+        val scores = Propagate.meanRounds(g, layers.last, 1)(target.dst)
           .join(g.nodes(target.dst).select(col("id"), col("pk")), Seq("id"))
           .localCheckpoint(eager = true)
-        Base(layers.init, scores, newId)
+        Base(layers, scores, newId)
       }
     }
   }
@@ -184,9 +192,9 @@ object Recommend {
     * [[recommend]]). `seedNode`'s edges are `added`; the rest is read in
     * at most R Spark jobs (hop r ≥ 2 reads B_{r−1}'s out-edges together
     * with its in-edges, a last one any in-edges the scorer's nodes still
-    * lack), then one job of base values, then one job for all R ball
-    * rounds: one local single-partition plan, with no exchange, sized by
-    * the ball and its in-edges. */
+    * lack), then one job of base values. The R rounds then run on the
+    * driver ([[Propagate.flatRound]]), over those collected rows, with no
+    * Spark job. */
   private def ballDelta(
       g: HeteroGraph,
       added: Seq[Edge],
@@ -194,7 +202,7 @@ object Recommend {
       target: EdgeKey,
       seedNode: Node,
       seedDst: Seq[Long],
-      rounds: Int)(implicit spark: SparkSession): Map[Node, Array[Double]] = {
+      rounds: Int): Map[Node, Array[Double]] = {
     def src(e: Edge): Node = (e._1.src, e._2)
     def dst(e: Edge): Node = (e._1.dst, e._3)
     val seeds = seedDst.toSet
@@ -237,49 +245,24 @@ object Recommend {
         }
       }).map { case ((r, t, id), v) => (r, (t, id)) -> v.head }
     // the flat layout over the ball: every node a round reads gets a dense
-    // gid in (type, id) order, every edge type a tag in name order; rows and
-    // edges enter sorted, so the sums run in one order whatever order the
+    // gid in (type, id) order, every edge type a tag in name order; edges
+    // enter sorted, so the sums run in one order whatever order the
     // collects returned, and a repeated request answers bit-identically
     val gid = (seedNode +: (1 to rounds).flatMap(r => inputs(needed(r)))).distinct.sorted
       .zipWithIndex.map { case (n, i) => n -> i.toLong }.toMap
     val node = gid.map(_.swap)
     val ins = (1 to rounds).map(r => needed(r).toSeq.flatMap(inEdges))
     val tag = ins.flatten.map(_._1).distinct.sortBy(_.name).zipWithIndex.toMap
-    // Every input frame is local and one partition, so the R rounds' hash
-    // joins and aggregates chain into one plan with no exchange: one Spark
-    // job. A join's output is one partition too but does not say so:
-    // coalesce(1) declares it. The limits are those outputs' exact row
-    // counts, known here: without them the planner estimates a join as the
-    // product of its inputs' sizes, and above
-    // spark.sql.maxSinglePartitionBytes it shuffles even single-partition
-    // inputs.
-    def local(rows: Seq[Product], schema: StructType) =
-      spark.createDataFrame(rows.map(Row.fromTuple).asJava, schema).coalesce(1)
-    def baseRows(r: Int) = fromBase(r).toSeq.map(n => (gid(n), baseVals((r, n))))
-    var h = local(((gid(seedNode), seedDegree(seedDst).toDouble) +: baseRows(0)).sortBy(_._1),
-      hSchema)
-    for (r <- 1 to rounds) {
-      val edges = local(ins(r - 1).map(e => (gid(src(e)), gid(dst(e)), tag(e._1))).sorted,
-        edgeSchema)
-      // no in-edge anywhere in the ball: every round is the identity
-      val out = if (tag.isEmpty) h else Propagate.flatCombine(h,
-        Propagate.flatMessages(edges, h, tag.size)
-          .coalesce(1).limit(ins(r - 1).map(dst).distinct.size))
-      // round r+1 reads needed(r) from this round, the rest from the base
-      h = if (r == rounds) out
-        else out.filter(col("gid").isin(needed(r).toSeq.map(gid): _*))
-          .unionByName(local(baseRows(r).sortBy(_._1), hSchema))
-          .coalesce(1).limit(inputs(needed(r + 1)).size)
+    def baseRows(r: Int) = fromBase(r).map(n => gid(n) -> baseVals((r, n))).toMap
+    val hR = (1 to rounds).foldLeft(baseRows(0) + (gid(seedNode) -> seedDegree(seedDst).toDouble)) {
+      (h, r) =>
+        val out = Propagate.flatRound(h,
+          ins(r - 1).map(e => (gid(src(e)), gid(dst(e)), tag(e._1))).sorted, tag.size)
+        // round r+1 reads needed(r) from this round, the rest from the base
+        if (r == rounds) out else out.filter(v => needed(r)(node(v._1))) ++ baseRows(r)
     }
-    h.collect().map(row => node(row.getLong(0)) -> row.getDouble(1)).collect {
-      case (n, v) if needed(rounds)(n) => n -> Array(v)
-    }.toMap
+    hR.collect { case (i, v) if needed(rounds)(node(i)) => node(i) -> Array(v) }
   }
-
-  private val hSchema = StructType(Seq(
-    StructField("gid", LongType, nullable = false), StructField("h", DoubleType, nullable = false)))
-  private val edgeSchema = StructType(Seq(StructField("src", LongType, nullable = false),
-    StructField("dst", LongType, nullable = false), StructField("tag", IntegerType, nullable = false)))
 
   /** Edges of `g` leaving one of `from` or entering one of `into`, every
     * edge type in one Spark job (none when both are empty), multi-edges
@@ -288,8 +271,8 @@ object Recommend {
     def ids(ns: Set[Node], t: String) = ns.toSeq.collect { case (`t`, id) => id }
     val parts = g.edges.toIndexedSeq.collect {
       case (k, df) if ids(from, k.src).nonEmpty || ids(into, k.dst).nonEmpty =>
-        k -> df.filter(col("src").isin(ids(from, k.src): _*) ||
-          col("dst").isin(ids(into, k.dst): _*)).select(col("src"), col("dst"))
+        k -> df.filter(among(ids(from, k.src), col("src")) || among(ids(into, k.dst), col("dst")))
+          .select(col("src"), col("dst"))
     }
     collectParts(parts.map(_._2))
       .map { case (i, r) => (parts(i)._1, r.getLong(1), r.getLong(2)) }
@@ -301,11 +284,17 @@ object Recommend {
       : Map[(Int, String, Long), Array[Double]] = {
     val live = requests.filter(_._4.nonEmpty).toIndexedSeq
     collectParts(live.map { case (_, _, df, ids) =>
-      df.filter(col("id").isin(ids.toSeq: _*)).select(col("id"), col("vec"))
+      df.filter(among(ids.toSeq, col("id"))).select(col("id"), col("vec"))
     }).map { case (i, r) =>
       (live(i)._1, live(i)._2, r.getLong(1)) -> r.getSeq[Double](2).toArray
     }.toMap
   }
+
+  /** `c` is one of `ids`. The ids enter as one array literal, which
+    * generated code reads by reference: the plan's code is the same for
+    * every id list, so a request compiles no new class (`isin` inlines
+    * each id). */
+  private def among(ids: Seq[Long], c: Column): Column = array_contains(typedlit(ids), c)
 
   /** Every row of `parts` (one schema) in one Spark job, each with the
     * index of its part; the row's own columns start at 1. */

@@ -86,7 +86,7 @@ class LearnSpec extends SparkSpec {
       .addDegree.withReverseEdges.withSelfLoops
     val types = g.nodes.keySet
     // the per-type reference: meanRounds one pinned round at a time
-    val layers = Propagate.meanLayers(g, Propagate.degreeInit(g), 2, types)
+    val layers = Propagate.meanLayers(g, Propagate.degreeInit(g), 2)
     def assertClose(got: Map[String, DataFrame], want: Map[String, DataFrame],
         ts: Set[String], what: String): Unit = for (t <- ts) {
       val j = got(t).select(col("id"), element_at(col("vec"), 1).as("a"))
@@ -101,6 +101,37 @@ class LearnSpec extends SparkSpec {
     val partial = Propagate.meanRoundsFlatDegree(g, g, types, 2, targets)
     assertClose(partial, layers(2), targets, "finalTargets target")
     assertClose(partial, layers(1), types -- targets, "finalTargets non-target")
+  }
+
+  test("flatRound on the driver is bit-identical to flatMessages + flatCombine") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    def bits(h: Map[Long, Double]) = h.map { case (i, v) => i -> java.lang.Double.doubleToRawLongBits(v) }
+    for (nTags <- 0 to 4; trial <- 0 until 5) {
+      // values for gids 0 until n; edges also leave and enter gids without
+      // a value, and a few repeat (multi-edges). gid 0 gets no in-edge and
+      // gid 1 only tag 0, so with 2+ tags some tag is absent there
+      val n = 4 + rnd.nextInt(30)
+      val h = (0 until n).map(i => i.toLong -> (1 + rnd.nextInt(40) + rnd.nextDouble())).toMap
+      val once = if (nTags == 0) Nil else Seq.fill(3 * n)(
+        (rnd.nextInt(n + 3).toLong, 1L + rnd.nextInt(n + 2), rnd.nextInt(nTags)))
+        .map { case (src, dst, tag) => (src, dst, if (dst == 1L) 0 else tag) }
+      // sorted, as the ball enters them
+      val edges = (once ++ once.take(n / 2)).sorted
+      val got = Propagate.flatRound(h, edges, nTags)
+      // the Spark round needs a tag; with none there is no edge and the
+      // round is the identity
+      val want = if (nTags == 0) h else {
+        val hDf = h.toSeq.sorted.toDF("gid", "h").coalesce(1)
+        Propagate.flatCombine(hDf,
+          Propagate.flatMessages(edges.toDF("src", "dst", "tag").coalesce(1), hDf, nTags))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      }
+      val what = s"nTags=$nTags trial=$trial"
+      assert(bits(got) === bits(want), what)
+      assert(got(0L) === h(0L), what)
+      if (nTags > 0) assert(got !== h, s"$what: no value moved")
+    }
   }
 
   test("meanRoundsFixedFlat is bit-identical to the per-type loop") {

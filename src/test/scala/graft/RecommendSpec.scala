@@ -5,6 +5,7 @@ import graft.graph.{GraphBuilder, HeteroGraph}
 import graft.learn.{Propagate, Scoring, TrainedModel}
 import graft.serve.Recommend
 import graft.topology.EdgeKey
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -181,7 +182,7 @@ class RecommendSpec extends SparkSpec {
 
   /** One warm request on the materialised sf0.001 graph, after a first
     * request built the memoised base layers: the answer, its rows and the
-    * Spark jobs it ran. Shared by the two budget tests below. */
+    * Spark jobs it ran. Shared by the three budget tests below. */
   private lazy val warmRequest: (DataFrame, Array[Row], Int) = {
     val g = entryGraph
     // the first request builds the memoised base layers
@@ -203,7 +204,7 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("a warm recommend on a materialised sf0.001 graph runs at most 17 Spark jobs") {
-    // the long-standing budget; the next test holds a request to its 4 jobs
+    // the long-standing budget; the next two tests hold a request to 4, then 3 jobs
     val (_, rows, jobs) = warmRequest
     assert(rows.length === 10)
     assert(jobs <= 17, s"warm recommend ran $jobs Spark jobs")
@@ -223,6 +224,22 @@ class RecommendSpec extends SparkSpec {
         p.nodeName
     }
     assert(bad.isEmpty, df.queryExecution.executedPlan.treeString)
+  }
+
+  test("a warm recommend on a materialised sf0.001 graph runs at most 3 Spark jobs and compiles no new codegen class") {
+    // the ball's edges, its base values, the scoring scan; the ball's
+    // rounds run on the driver
+    val (_, rows, jobs) = warmRequest
+    assert(rows.length === 10)
+    assert(jobs <= 3, s"warm recommend ran $jobs Spark jobs")
+    // request-specific values are literals read by reference: more warm
+    // requests, on playlists of other sizes, reuse the generated classes
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    for (seeds <- Seq(Seq(6L), Seq(7L, 8L, 9L), Seq(10L, 11L, 12L, 13L, 14L)))
+      assert(Recommend.recommend(entryGraph, ordersPart, seeds, 10, model = Some(head))
+        .collect().length === 10, seeds)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+      "warm requests compiled new codegen classes")
   }
 
   test("a head of another weight width fails the request, not its logits") {
